@@ -12,19 +12,31 @@ idea). This module is the Structured Streaming face:
 - each micro-batch computes signatures for its documents, probes the
   index with the banded equi-join (plus a within-batch self-join that
   collapses each batch near-dup cluster to its min id), verifies
-  candidates with exact shingle Jaccard, and appends only SURVIVORS to
+  candidates with exact shingle Jaccard, and writes only SURVIVORS to
   the output and to the index;
-- every write is a keyed upsert (sources/merge.py), and self-pairs are
-  excluded from the probe, so a replayed micro-batch reaches the same
-  decisions against a partially-updated index — effectively-once on
-  foreachBatch's at-least-once delivery, the same recipe as
-  upsert_sink/cms_sketch_sink.
+- a survivor whose key is new to a table is APPENDED to it; one whose
+  key is already there (a replayed batch, or an accepted doc_id re-sent
+  with new text) goes through the keyed upsert (sources/merge.py), so
+  the update wins. Self-pairs are excluded from the probe, so a replayed
+  micro-batch reaches the same decisions against a partially-updated
+  index — effectively-once on foreachBatch's at-least-once delivery,
+  the same recipe as upsert_sink/cms_sketch_sink. An interrupted upsert
+  swap is recovered at entry (sources/merge.recover_swap).
 
 Scale shape: per batch, work = |batch| x bucket width (banded equi-join
 against the index; the index side is read pruned to the probe's band
-keys by the join), never |corpus|^2. The index grows linearly with the
-ACCEPTED corpus; at 100 TB it would be bucketed/partitioned by band_key
-so each micro-batch's probe prunes to matching files.
+keys by the join), never |corpus|^2. The write cost is |survivors| plus
+one key-column read per table (the "already present" check); the
+accepted corpus is rewritten only when a batch re-sends present keys.
+The index grows linearly with the ACCEPTED corpus; at 100 TB it would
+be bucketed/partitioned by band_key so each micro-batch's probe prunes
+to matching files.
+
+Maintenance: each append adds files to every table (one per written
+partition, one per batch at micro-batch sizes). Compact the three
+tables (``out_path``, ``index_dir``/docs and ``index_dir``/bands) with
+sources/compaction.compact_parquet between batches; compaction changes
+layout only, never a gate decision.
 """
 from __future__ import annotations
 
@@ -39,7 +51,7 @@ from esco_neo4j_spark.operators.dedup import (
     md5_int28,
     shingled,
 )
-from esco_neo4j_spark.sources.merge import upsert_parquet
+from esco_neo4j_spark.sources.merge import recover_swap, upsert_parquet
 
 
 def _paths(index_dir: str) -> tuple[str, str]:
@@ -69,15 +81,29 @@ def process_neardup_batch(
     bands_path, docs_path = _paths(index_dir)
     spark = batch_df.sparkSession
     rows_per_band = num_hashes // bands
+    for path in (out_path, docs_path, bands_path):
+        recover_swap(path)
+    # the tables as they stand before this batch (a read pins the file
+    # list, so the probe and the key checks below never see its writes)
+    base = {
+        path: spark.read.parquet(path)
+        for path in (out_path, docs_path, bands_path)
+        if os.path.exists(path)
+    }
 
-    batch = batch_df.dropDuplicates([id_col])
-    sh = shingled(batch, text_col, id_col, shingle_n)
+    # a null id never pairs (every probe predicate is null) and is never
+    # written (the survivor semi-joins drop it): leave it out up front
+    batch = (
+        batch_df.dropDuplicates([id_col])
+        .filter(F.col(id_col).isNotNull())
+        .localCheckpoint(eager=True)
+    )
+    # several probes and writes below: materialize each stage once
+    sh = shingled(batch, text_col, id_col, shingle_n).localCheckpoint(eager=True)
     hashed = sh.select("id", F.transform("sh", md5_int28).alias("hs"))
     sigs = _minhash_sig_from_hashed(hashed, num_hashes)
     banded = _banded_keys(sigs, bands, rows_per_band, max_bucket)
-    # several probes below: materialize once (small: |batch| x bands)
     banded = banded.localCheckpoint(eager=True)
-    sh = sh.localCheckpoint(eager=True)
 
     def verified(cands: DataFrame, other_sh: DataFrame) -> DataFrame:
         """(id_new, id_other) candidates -> distinct dup id_new after the
@@ -101,9 +127,8 @@ def process_neardup_batch(
         )
 
     dup_ids = None
-    if os.path.exists(bands_path):
-        base_bands = spark.read.parquet(bands_path)
-        base_docs = spark.read.parquet(docs_path)
+    if bands_path in base:
+        base_bands, base_docs = base[bands_path], base[docs_path]
         cand_base = (
             banded.alias("a")
             .join(
@@ -138,9 +163,9 @@ def process_neardup_batch(
     survivor_ids = (
         sh.select("id").join(dup_ids, sh["id"] == dup_ids["id_new"], "left_anti")
     )
-    # materialize BEFORE the writes: the upserts below REPLACE the index
-    # directories (rename swap), and a lazy survivor_ids would re-read
-    # them mid-replacement (observed FAILED_READ_FILE on the third write)
+    # materialize BEFORE the writes: the appends and upserts below change
+    # the tables the probe read, and a lazy survivor_ids would re-read
+    # them mid-write (an upsert swap renames the directory away)
     survivor_ids = survivor_ids.localCheckpoint(eager=True)
     survivors = batch.join(
         survivor_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
@@ -149,16 +174,27 @@ def process_neardup_batch(
     s_bands = banded.join(survivor_ids.select("id"), "id", "left_semi")
 
     def write(path: str, df: DataFrame, keys: list[str]) -> None:
-        if os.path.exists(path):
-            upsert_parquet(spark, path, df, keys)
-        else:
-            df.write.mode("overwrite").parquet(path)
+        """Append the rows whose key is new to the table; upsert the rest
+        (update wins, as on a replay)."""
+        table = base.get(path)
+        if table is not None:
+            if table.schema.simpleString() != df.schema.simpleString():
+                # new or retyped columns: the upsert evolves the schema
+                upsert_parquet(spark, path, df, keys)
+                return
+            present = df.join(table.select(*keys), keys, "left_semi")
+            if not present.isEmpty():
+                # fix the split before writing: once the upsert swaps the
+                # table, a lazy ``present`` would re-read it
+                present = present.localCheckpoint(eager=True)
+                upsert_parquet(spark, path, present, keys)
+                df = df.join(present.select(*keys), keys, "left_anti")
+        df.write.mode("append").parquet(path)
 
-    n = survivors.count()
     write(out_path, survivors, [id_col])
     write(docs_path, s_sh, ["id"])
     write(bands_path, s_bands, ["id", "band_id"])
-    return n
+    return survivor_ids.count()
 
 
 def neardup_gate_sink(
@@ -170,8 +206,9 @@ def neardup_gate_sink(
 ):
     """foreachBatch wrapper over process_neardup_batch: accepted (non-
     near-dup) documents land in ``out_path``, and the band index under
-    ``index_dir`` advances, one keyed-upsert transaction set per
-    micro-batch. Returns the started StreamingQuery."""
+    ``index_dir`` advances, one set of appends (and upserts for keys
+    already present) per micro-batch. Returns the started
+    StreamingQuery."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         process_neardup_batch(batch_df, index_dir, out_path, **kwargs)

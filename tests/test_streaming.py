@@ -470,6 +470,30 @@ def test_neardup_gate_stream_equals_incremental_batch(spark, tmp_path):
     assert spark.read.parquet(out_path).count() == n_before
     assert {r["doc_id"] for r in spark.read.parquet(out_path).collect()} == want
 
+    def assert_unique(path, keys):
+        t = spark.read.parquet(path)
+        assert t.count() == t.select(*keys).distinct().count(), path
+
+    def assert_gate_unique():
+        assert_unique(out_path, ["doc_id"])
+        assert_unique(os.path.join(index_dir, "docs"), ["id"])
+        assert_unique(os.path.join(index_dir, "bands"), ["id", "band_id"])
+
+    assert_gate_unique()
+
+    # update wins: an accepted doc_id re-sent with new (unique) text
+    # replaces its text in the output, as an upsert does
+    doc = min(want)
+    new_text = "qq1 qq2 qq3 qq4 qq5 qq6 qq7 qq8 qq9"
+    upd = spark.createDataFrame([(doc, new_text)], "doc_id bigint, text string")
+    assert process_neardup_batch(upd, index_dir, out_path, **kwargs) == 1
+    out = spark.read.parquet(out_path)
+    assert out.count() == n_before
+    assert [r["text"] for r in out.filter(F.col("doc_id") == doc).collect()] == [
+        new_text
+    ]
+    assert_gate_unique()
+
 
 def test_ivf_index_stream_equals_batch(spark, tmp_path):
     """The streaming IVF index (file stream, one file per trigger) ends
