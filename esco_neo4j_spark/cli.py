@@ -253,12 +253,13 @@ def cmd_search(args) -> int:
 def cmd_translate(args) -> int:
     """Translate a node property and write it back (reference:
     src/esco_translate.py:385-419): distinct-before-compute, pandas-UDF
-    translate, key-join write-back — then a crash-safe rename swap of the
+    translate, key-join write-back — then a crash-safe ``swap_in`` of the
     node table (the set-oriented form of the reference's per-node SET
-    n.prop_he): at every point in the sequence a complete table copy
-    exists on disk under either the live or the __old name."""
+    n.prop_he): a crash at any point leaves a complete table copy that
+    the next ``ensure_warehouse`` restores."""
     from esco_neo4j_spark.operators.textmodel import translate_column
     from esco_neo4j_spark.sources import ensure_warehouse
+    from esco_neo4j_spark.sources.merge import swap_in
 
     if getattr(args, "model_dir", None):
         # Pre-flight asset check before any model load, as the reference
@@ -299,17 +300,7 @@ def cmd_translate(args) -> int:
             limit=args.limit,
         )
         return 0
-    # Crash-safe swap: write new data aside, move the live table out of the
-    # way (not rmtree — a crash mid-sequence must always leave a complete
-    # copy on disk), promote the new one, then drop the old copy.
-    tmp = path + "__translating"
-    old = path + "__old"
-    translated.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(path, translated.write.mode("overwrite").parquet)
     n = spark.read.parquet(path).filter(F.col(out_col).isNotNull()).count()
     print(json.dumps({"table": table, "column": out_col, "translated": n}))
     return 0

@@ -23,10 +23,10 @@ store has:
   non-null embeddings, partitioned by ``vbucket`` and sorted by
   ``vec_id`` so id-list predicates prune at the row-group level too),
   and ``members`` (each coarse layer's node ids, partitioned by
-  ``stride``). Everything swaps atomically
-  under the crash-safe rename contract (sources/merge.py — the same
-  swap cli.py's translate and the IVF index use; `recover_swap` runs at
-  every entry) with ``_MANIFEST.json`` pinning the full derivation.
+  ``stride``). The three tables and both manifests are written inside
+  one crash-safe ``swap_in`` (sources/merge.py — the swap every table
+  rewrite in the engine uses; ``recover_swap`` runs at every entry),
+  with ``_MANIFEST.json`` pinning the full derivation.
 - **serve** (`serve_layered`): the registered
   ``vec_graph_search_layered_indexed`` face — descend the STORED coarse
   layers, then walk the stored base graph, touching ONLY the partitions
@@ -73,10 +73,11 @@ from __future__ import annotations
 import json
 import math
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from esco_neo4j_spark.sources.merge import recover_swap, swap_in
 
 ALGO_VERSION = 2  # r10: XOR-decorrelated per-table ring orders
 
@@ -372,62 +373,56 @@ def build_layered_index(
         )
     )
 
-    path = _layers_path(index_dir)
-    tmp, old = path + "__merging", path + "__old"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    (
-        all_layers.repartition("stride", "pbucket")
-        .sortWithinPartitions("stride", "pbucket", "src")
-        .write.mode("overwrite")
-        .partitionBy("stride", "pbucket")
-        .parquet(os.path.join(tmp, "graph"))
-    )
-    (
-        vectors.repartition("vbucket")
-        .sortWithinPartitions("vbucket", "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("vbucket")
-        .parquet(os.path.join(tmp, "vectors"))
-    )
-    (
-        members.repartition("stride")
-        .sortWithinPartitions("stride", "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("stride")
-        .parquet(os.path.join(tmp, "members"))
-    )
-    # The artifact is read-mostly: Hadoop's LocalFileSystem leaves a
-    # `.<file>.crc` sidecar beside every parquet file (plus `_SUCCESS`
-    # markers), which DOUBLES the filesystem objects the cold serve-open
-    # lists AND makes every pruned per-round read verify a whole-file
-    # checksum. Note the residual protection honestly (r10 ADVICE):
-    # parquet page-checksum VERIFICATION is off by default
-    # (parquet.page.verify-checksum.enabled=false), so after the strip
-    # the integrity net is the manifest match + the oracle value checks,
-    # not a read-time checksum; flip that parquet conf on serve reads if
-    # artifact corruption is ever suspected.
-    # Stripping them after the write, before the swap, measured the
-    # sf30 cold-cache serve 36.2->28.0s / 50.7->32.9s / 22.0->19.0s on
-    # three drop_caches A/B pairs with bit-identical output (r10).
-    # ChecksumFileSystem skips verification when no sidecar exists, so
-    # reads stay correct; artifacts built before this strip keep their
-    # sidecars (and the old read behavior) until their next rebuild.
-    _strip_fs_sidecars(tmp)
-    # file-listing manifest AFTER the strip (it records the final file
-    # set), BEFORE the derivation manifest (a tree with _MANIFEST.json
-    # is treated as complete by the swap recovery)
-    _write_files_manifest(spark, tmp)
-    with open(os.path.join(tmp, "_MANIFEST.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        (
+            all_layers.repartition("stride", "pbucket")
+            .sortWithinPartitions("stride", "pbucket", "src")
+            .write.mode("overwrite")
+            .partitionBy("stride", "pbucket")
+            .parquet(os.path.join(tmp, "graph"))
+        )
+        (
+            vectors.repartition("vbucket")
+            .sortWithinPartitions("vbucket", "vec_id")
+            .write.mode("overwrite")
+            .partitionBy("vbucket")
+            .parquet(os.path.join(tmp, "vectors"))
+        )
+        (
+            members.repartition("stride")
+            .sortWithinPartitions("stride", "vec_id")
+            .write.mode("overwrite")
+            .partitionBy("stride")
+            .parquet(os.path.join(tmp, "members"))
+        )
+        # The artifact is read-mostly: Hadoop's LocalFileSystem leaves a
+        # `.<file>.crc` sidecar beside every parquet file (plus
+        # `_SUCCESS` markers), which DOUBLES the filesystem objects the
+        # cold serve-open lists AND makes every pruned per-round read
+        # verify a whole-file checksum. Note the residual protection
+        # honestly (r10 ADVICE): parquet page-checksum VERIFICATION is
+        # off by default (parquet.page.verify-checksum.enabled=false), so
+        # after the strip the integrity net is the manifest match + the
+        # oracle value checks, not a read-time checksum; flip that
+        # parquet conf on serve reads if artifact corruption is ever
+        # suspected.
+        # Stripping them after the write, before the swap, measured the
+        # sf30 cold-cache serve 36.2->28.0s / 50.7->32.9s / 22.0->19.0s
+        # on three drop_caches A/B pairs with bit-identical output (r10).
+        # ChecksumFileSystem skips verification when no sidecar exists,
+        # so reads stay correct; artifacts built before this strip keep
+        # their sidecars (and the old read behavior) until their next
+        # rebuild.
+        _strip_fs_sidecars(tmp)
+        # file-listing manifest AFTER the strip (it records the final
+        # file set), BEFORE the derivation manifest (ensure_layered_index
+        # treats a tree whose _MANIFEST.json matches as complete)
+        _write_files_manifest(spark, tmp)
+        with open(os.path.join(tmp, "_MANIFEST.json"), "w") as f:
+            json.dump(manifest, f, indent=1, sort_keys=True)
+
+    swap_in(_layers_path(index_dir), write)
     return manifest
 
 
@@ -464,8 +459,6 @@ def ensure_layered_index(
     ``sf_dir`` (missing/corrupt manifest, different corpus row count,
     different algo version, bucket count or any derived parameter).
     Returns the index directory."""
-    from esco_neo4j_spark.sources.merge import recover_swap
-
     if index_dir is None:
         index_dir = index_dir_for(sf_dir)
     os.makedirs(index_dir, exist_ok=True)

@@ -6,9 +6,9 @@ the byte count, is what kills scan planning and NameNode/listing calls).
 Spark-first shape: the compaction plan derives from FILE METADATA only
 (sizes from a directory listing — the same information a table format's
 manifest carries), the rewrite is one ``repartition(n)`` pass sized so
-output files land near ``target_bytes``, and the swap is the crash-safe
-rename recipe shared with the merge/upsert family (recovery at entry,
-so a crash mid-swap never reads as a missing table). Row identity is
+output files land near ``target_bytes``, and the swap is
+sources/merge.swap_in, shared with the merge/upsert family (recovery at
+entry, so a crash mid-swap never reads as a missing table). Row identity is
 exactly preserved — compaction is physical layout only.
 
 At scale: run per partition directory (hive layouts compact each
@@ -20,11 +20,10 @@ rewrite only directories whose small-file count crosses the threshold.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from esco_neo4j_spark.sources.merge import recover_swap
+from esco_neo4j_spark.sources.merge import recover_swap, swap_in
 
 
 def compaction_plan(
@@ -59,7 +58,7 @@ def compact_parquet(
     min_files: int = 2,
 ) -> dict:
     """Compact one parquet directory to ~``target_bytes`` files via a
-    single repartition rewrite + crash-safe rename swap. No-op (and says
+    single repartition rewrite + crash-safe ``swap_in``. No-op (and says
     so) when the plan isn't worth it. Returns the plan with
     'compacted': bool and the row count (verified equal before the
     swap — a compaction that changes row count must never land)."""
@@ -69,19 +68,16 @@ def compact_parquet(
         return {**plan, "compacted": False}
     df: DataFrame = spark.read.parquet(path)
     n_before = df.count()
-    tmp, old = path + "__merging", path + "__old"
-    df.repartition(plan["n_output"]).write.mode("overwrite").parquet(tmp)
-    n_after = spark.read.parquet(tmp).count()
-    if n_after != n_before:  # never land a lossy rewrite
-        shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"compaction row-count mismatch: {n_before} -> {n_after}"
-        )
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+
+    def write(tmp: str) -> None:
+        df.repartition(plan["n_output"]).write.mode("overwrite").parquet(tmp)
+        n_after = spark.read.parquet(tmp).count()
+        if n_after != n_before:  # never land a lossy rewrite
+            raise RuntimeError(
+                f"compaction row-count mismatch: {n_before} -> {n_after}"
+            )
+
+    swap_in(path, write)
     return {**plan, "compacted": True, "rows": n_before}
 
 

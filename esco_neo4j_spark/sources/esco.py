@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 from esco_neo4j_spark.functions.text import embedding_text
 from esco_neo4j_spark.operators.textmodel import embed_column
 from esco_neo4j_spark.sources.fixtures import ensure_fixture_csvs
+from esco_neo4j_spark.sources.merge import recover_swap
 
 ESCO_DIR = "/root/reference/ESCO"
 DEFAULT_WAREHOUSE = os.path.join(
@@ -282,12 +283,16 @@ def ensure_warehouse(
     spark: SparkSession, warehouse_dir: str = DEFAULT_WAREHOUSE
 ) -> str:
     """Build the warehouse once (fixtures for the snapshot's two missing
-    CSVs are synthesized deterministically — sources/fixtures.py)."""
+    CSVs are synthesized deterministically — sources/fixtures.py), and
+    finish any table swap a crash interrupted (translate rewrites node
+    tables through sources/merge.swap_in; every reader passes here)."""
     marker = os.path.join(warehouse_dir, "_SUCCESS_INGEST")
     if not os.path.exists(marker):
         fixture_dir = os.path.join(warehouse_dir, "_fixtures")
         ensure_fixture_csvs(ESCO_DIR, fixture_dir)
         ingest(spark, ESCO_DIR, warehouse_dir, fixture_dir=fixture_dir)
+    for name in (*NODE_TABLES, "edges"):
+        recover_swap(os.path.join(warehouse_dir, name))
     return warehouse_dir
 
 

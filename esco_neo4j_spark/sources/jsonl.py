@@ -16,7 +16,7 @@ Design rules for 100 TB:
   and a 99.999%-good ingest must not die at line 7e8.
 - **Sink never coalesces to one file** — per-partition files parallelize
   the write and the next read; small-file hygiene is compaction's job
-  (sources/partitioned.py:compact_parquet), not the writer's.
+  (sources/compaction.py:compact_parquet), not the writer's.
 
 The reference ingests CSV only (src/esco_ingest.py:80-91); JSONL is an
 extension mirroring its A1 scan + A10 JSON-sink surface at dataset scale

@@ -23,16 +23,20 @@ transactional table format (e.g. Delta's MERGE INTO) buys the same plan
 plus snapshot isolation. The join itself should broadcast when the
 updates batch is small — Spark's AQE decides from the actual batch size.
 
-The write is crash-safe the same way cli.py's translate swap is: the new
-table is fully written aside, the live table renamed out of the way, the
-new one promoted, the old dropped — a complete copy exists on disk at
-every point in the sequence.
+Every whole-table rewrite in the engine (this upsert, compaction, the
+translate write-back, the ANN and streaming index maintainers) goes
+through ``swap_in``, the one crash-safe swap: the new table is fully
+written aside into ``<path>__merging``, the live table renamed to
+``<path>__old``, the new one promoted, the old dropped — a complete copy
+exists on disk at every point in the sequence. ``recover_swap`` finishes
+or undoes a swap a crash interrupted.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,28 +77,53 @@ def merge_upsert(base: DataFrame, updates: DataFrame, keys: list[str]) -> DataFr
 
 def upsert_parquet(
     spark: SparkSession, path: str, updates: DataFrame, keys: list[str]
-) -> int:
+) -> None:
     """Merge ``updates`` into the parquet table at ``path`` in place
-    (crash-safe rename swap). Returns the merged row count."""
-    base = spark.read.parquet(path)
-    merged = merge_upsert(base, updates, keys)
+    (``swap_in``). A missing table is created from the deduplicated
+    updates."""
+
+    def write(tmp: str) -> None:
+        if os.path.exists(path):
+            merged = merge_upsert(spark.read.parquet(path), updates, keys)
+        else:
+            merged = updates.dropDuplicates(keys)
+        merged.write.mode("overwrite").parquet(tmp)
+
+    swap_in(path, write)
+
+
+def swap_in(path: str, write: Callable[[str], None]) -> None:
+    """Replace the table at ``path`` (or create it) crash-safely.
+
+    ``write(tmp)`` writes the complete new table into the scratch
+    directory ``tmp``; it may read the live table. An interrupted swap is
+    finished first (``recover_swap``, which also clears stale scratch
+    dirs). If ``write`` raises, the scratch dir is removed and the live
+    table is untouched — a partial write is never promoted. Otherwise the
+    live table is renamed to ``__old``, the scratch dir promoted and
+    ``__old`` dropped."""
     tmp, old = path + "__merging", path + "__old"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):
+    recover_swap(path)
+    try:
+        write(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if os.path.exists(path):
+        os.rename(path, old)
+        os.rename(tmp, path)
         shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return spark.read.parquet(path).count()
+    else:
+        os.rename(tmp, path)
 
 
 def recover_swap(path: str) -> None:
     """Complete or roll back an interrupted rename-swap on ``path``.
 
-    The swap's one unsafe window is between ``os.rename(path, old)`` and
-    ``os.rename(tmp, path)``: the table is absent while ``tmp`` (fully
-    written — the write always completes before the first rename) and
-    ``old`` (the previous table) still exist. Every reader/ingester of a
+    The swap's one unsafe window is between ``swap_in``'s two renames
+    (``path -> old``, ``tmp -> path``): the table is absent while ``tmp``
+    (fully written — the write always completes before the first rename)
+    and ``old`` (the previous table) still exist. Every reader/ingester of a
     swapped table calls this first, otherwise a crash in that window
     reads as "no table" and a fresh write silently replaces the corpus
     with one batch. Roll FORWARD to ``tmp`` when present, else roll BACK

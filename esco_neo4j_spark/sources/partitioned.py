@@ -1,6 +1,5 @@
-"""Date-partitioned layout + small-file compaction — the scan-pruning and
-file-hygiene half of the storage story (bucketing in sources/bucketed.py
-is the join half).
+"""Date-partitioned layout — the scan-pruning half of the storage story
+(bucketing in sources/bucketed.py is the join half).
 
 At 100 TB an events table is append-only and time-filtered in almost
 every query; laying it out as ``event_date=YYYY-MM-DD/`` directories
@@ -9,17 +8,14 @@ are never listed, let alone read. tests/test_plan_quality.py pins the
 plan property (PartitionFilters on the scan, partition count == matched
 days).
 
-Compaction is the other side of the same coin: streaming/incremental
-writers produce many small files per partition, and at scale the
-scheduler + scan overhead of tiny files dominates I/O. ``compact_parquet``
-rewrites a table directory to ~target-size files with the same crash-safe
-rename swap as sources/merge.py.
+Small-file compaction, the file-hygiene side of the same coin, lives in
+sources/compaction.py (``compact_partitioned`` sweeps the ``key=value``
+directories of a layout like this one).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,38 +40,6 @@ def ensure_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
             .parquet(out)
         )
     return out
-
-
-def compact_parquet(
-    spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Rewrite a parquet directory into ceil(size/target) evenly-sized
-    files (crash-safe swap). Returns the resulting file count.
-
-    Local stand-in for the maintenance job every 100 TB deployment runs;
-    on a partitioned table, run per partition so only dirty partitions
-    rewrite."""
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, -(-size // target_bytes))
-    df = spark.read.parquet(path)
-    tmp, old = path + "__compacting", path + "__old"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return sum(
-        1
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
 
 
 def events_by_date(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,8 +13,6 @@ with a real trigger.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -258,10 +256,7 @@ def upsert_sink(stream_df: DataFrame, path: str, keys: list[str], checkpoint: st
     from esco_neo4j_spark.sources.merge import upsert_parquet
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not os.path.exists(path):
-            batch_df.dropDuplicates(keys).write.mode("overwrite").parquet(path)
-        else:
-            upsert_parquet(batch_df.sparkSession, path, batch_df, keys)
+        upsert_parquet(batch_df.sparkSession, path, batch_df, keys)
 
     return (
         stream_df.writeStream.foreachBatch(_sink)

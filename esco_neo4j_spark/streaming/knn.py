@@ -50,7 +50,11 @@ from esco_neo4j_spark.operators.similarity import (
     _all_buckets_pudf,
     _pair_cosine_pudf,
 )
-from esco_neo4j_spark.sources.merge import recover_swap, upsert_parquet
+from esco_neo4j_spark.sources.merge import (
+    recover_swap,
+    swap_in,
+    upsert_parquet,
+)
 
 
 def _paths(index_dir: str) -> tuple[str, str, str]:
@@ -184,30 +188,21 @@ def process_knn_batch(
         .select("src", "nbr", "score", F.col("rk").cast("int").alias("rk"))
         .localCheckpoint(eager=True)
     )
-    if os.path.exists(edge_path):
+    def write_edges(tmp: str) -> None:
         # upsert replaces each affected src's FULL list: delete-then-
         # insert semantics via an anti-join on src, then append
-        kept = spark.read.parquet(edge_path).join(
-            affected, "src", "left_anti"
-        )
-        merged_edges = kept.unionByName(updated).localCheckpoint(eager=True)
-        import shutil
-
-        tmp, old = edge_path + "__merging", edge_path + "__old"
+        merged_edges = updated
+        if os.path.exists(edge_path):
+            merged_edges = (
+                spark.read.parquet(edge_path)
+                .join(affected, "src", "left_anti")
+                .unionByName(updated)
+            )
         merged_edges.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(edge_path, old)
-        os.rename(tmp, edge_path)
-        shutil.rmtree(old)
-    else:
-        updated.write.mode("overwrite").parquet(edge_path)
-    if have_state:
-        upsert_parquet(spark, keyed_path, new_keyed, ["id", "t"])
-        upsert_parquet(spark, vec_path, batch, ["id"])
-    else:
-        new_keyed.write.mode("overwrite").parquet(keyed_path)
-        batch.write.mode("overwrite").parquet(vec_path)
+
+    swap_in(edge_path, write_edges)
+    upsert_parquet(spark, keyed_path, new_keyed, ["id", "t"])
+    upsert_parquet(spark, vec_path, batch, ["id"])
     return n
 
 

@@ -80,10 +80,7 @@ def process_shard_batch(
         # pin before the rename swap (a lazy frame would re-read the
         # directory mid-replacement — the dedup-gate hazard)
         rows = rows.localCheckpoint(eager=True)
-        if os.path.exists(part_dir):
-            upsert_parquet(spark, part_dir, rows, [id_col])
-        else:
-            rows.write.mode("overwrite").parquet(part_dir)
+        upsert_parquet(spark, part_dir, rows, [id_col])
         # manifest entry recomputed from the LANDED partition
         landed = spark.read.parquet(part_dir)
         agg = landed.agg(

@@ -43,7 +43,11 @@ from esco_neo4j_spark.operators.similarity import (
     brute_force_topk,
     ivf_assign_with_centroids,
 )
-from esco_neo4j_spark.sources.merge import upsert_parquet
+from esco_neo4j_spark.sources.merge import (
+    recover_swap,
+    swap_in,
+    upsert_parquet,
+)
 
 
 def _paths(index_dir: str) -> tuple[str, str]:
@@ -51,14 +55,6 @@ def _paths(index_dir: str) -> tuple[str, str]:
         os.path.join(index_dir, "assignments"),
         os.path.join(index_dir, "cells"),
     )
-
-
-def _recover_swap(path: str) -> None:
-    """Finish or undo an interrupted rename-swap (see
-    sources/merge.recover_swap — shared with the shard sink)."""
-    from esco_neo4j_spark.sources.merge import recover_swap
-
-    recover_swap(path)
 
 
 def process_vector_batch(
@@ -78,8 +74,8 @@ def process_vector_batch(
     assign_path, cells_path = _paths(index_dir)
     # a crash mid-swap (recenter or cells rewrite) must not read as a
     # fresh index — finish or undo the interrupted rename first
-    _recover_swap(assign_path)
-    _recover_swap(cells_path)
+    recover_swap(assign_path)
+    recover_swap(cells_path)
     batch = batch_df.dropDuplicates([id_col]).filter(
         F.col(vec_col).isNotNull()
     )
@@ -88,30 +84,16 @@ def process_vector_batch(
     # dedup gate: a lazy frame re-reads the directory mid-replacement)
     assigned = assigned.localCheckpoint(eager=True)
     n = assigned.count()
-    if os.path.exists(assign_path):
-        upsert_parquet(spark, assign_path, assigned, [id_col])
-    else:
-        assigned.write.mode("overwrite").parquet(assign_path)
+    upsert_parquet(spark, assign_path, assigned, [id_col])
     # per-cell stats from the post-upsert table: idempotent under replay
     counts = (
         spark.read.parquet(assign_path)
         .groupBy("cell")
         .agg(F.count("*").cast("bigint").alias("n_vectors"))
     )
-    # crash-safe rename swap, same recipe as sources/merge.upsert_parquet
-    # (r5 ADVICE: the old overwrite-in-place left a corrupt cells table
-    # if the process died mid-write, and leaked the _tmp directory)
-    import shutil
-
-    tmp, old = cells_path + "__merging", cells_path + "__old"
-    counts.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(cells_path):
-        os.rename(cells_path, old)
-    os.rename(tmp, cells_path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    # swapped, not overwritten in place: a process dying mid-write must
+    # not leave a corrupt cells table
+    swap_in(cells_path, counts.write.mode("overwrite").parquet)
     return n
 
 
@@ -167,7 +149,7 @@ def cell_imbalance(spark: SparkSession, index_dir: str, k: int) -> float:
     longer prune, so the trigger fires before the index degenerates to
     a linear scan of one giant cell."""
     _, cells_path = _paths(index_dir)
-    _recover_swap(cells_path)
+    recover_swap(cells_path)
     if not os.path.exists(cells_path):
         return 0.0
     rows = (
@@ -201,13 +183,11 @@ def recenter_index(
     a recenter: after it, ``assignments`` equals
     ivf_assign_with_centroids(corpus, new_centroids) exactly — vectors
     indexed before the drift move cells along with everything else."""
-    import shutil
-
     from esco_neo4j_spark.operators.similarity import kmeans_train
 
     assign_path, cells_path = _paths(index_dir)
-    _recover_swap(assign_path)
-    _recover_swap(cells_path)
+    recover_swap(assign_path)
+    recover_swap(cells_path)
     # pin the corpus before overwriting the directory it reads from
     corpus = (
         spark.read.parquet(assign_path)
@@ -222,24 +202,13 @@ def recenter_index(
         corpus, new_cents, id_col, vec_col
     ).localCheckpoint(eager=True)
 
-    def _swap(path: str, df: DataFrame) -> None:
-        tmp, old = path + "__merging", path + "__old"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-    _swap(assign_path, assigned)
+    swap_in(assign_path, assigned.write.mode("overwrite").parquet)
     counts = (
         spark.read.parquet(assign_path)
         .groupBy("cell")
         .agg(F.count("*").cast("bigint").alias("n_vectors"))
     )
-    _swap(cells_path, counts)
+    swap_in(cells_path, counts.write.mode("overwrite").parquet)
     return new_cents
 
 
@@ -272,7 +241,7 @@ def ivf_index_probe(
     )
     probe_cells = [r["cid"] for r in ranked[:nprobe]]
     assign_path, _ = _paths(index_dir)
-    _recover_swap(assign_path)
+    recover_swap(assign_path)
     cand = spark.read.parquet(assign_path).filter(
         F.col("cell").isin(probe_cells)
     )

@@ -34,6 +34,9 @@ def test_compaction_preserves_rows_and_reduces_files(spark, tmp_path):
     assert after_files < n_small and after_files == res["n_output"]
     after = {tuple(r) for r in spark.read.parquet(path).collect()}
     assert after == before
+    # the swap leaves no scratch dirs behind
+    assert not os.path.exists(path + "__merging")
+    assert not os.path.exists(path + "__old")
 
 
 def test_compaction_noop_when_already_compact(spark, tmp_path):

@@ -39,6 +39,25 @@ def warehouse(spark):
     return ensure_warehouse(spark)
 
 
+def test_ensure_warehouse_recovers_interrupted_swap(spark, tmp_path):
+    """A crash inside a node-table swap (translate's write-back) left the
+    table renamed to ``__old`` with no live copy: ensure_warehouse must
+    restore it instead of handing readers a warehouse with a hole. No
+    ESCO CSV is read — the ingest marker is already present."""
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    with open(os.path.join(wh, "_SUCCESS_INGEST"), "w") as f:
+        f.write("")
+    skill = os.path.join(wh, "nodes_skill")
+    spark.createDataFrame(
+        [("s1", "alpha"), ("s2", "beta")], "conceptUri string, label string"
+    ).write.parquet(skill + "__old")
+    assert ensure_warehouse(spark, wh) == wh
+    assert not os.path.exists(skill + "__old")
+    got = sorted(r["conceptUri"] for r in spark.read.parquet(skill).collect())
+    assert got == ["s1", "s2"]
+
+
 def test_golden_node_counts(spark, warehouse):
     g = load_graph(spark, warehouse)
     for view, want in GOLDEN_NODE_COUNTS.items():

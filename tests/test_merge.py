@@ -1,15 +1,22 @@
 """Incremental upsert (sources/merge.py) — MERGE INTO semantics for the
 node tables, mirroring the reference's ``MERGE ... SET n += $props``
 (reference: src/esco_ingest.py:93-171): insert-new, update-wins-per-key,
-explicit-null overwrite, base-only columns carried, schema evolution."""
+explicit-null overwrite, base-only columns carried, schema evolution —
+and ``swap_in``, the crash-safe swap every table rewrite goes through."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from esco_neo4j_spark.sources.merge import merge_upsert, upsert_parquet
+from esco_neo4j_spark.sources.merge import (
+    merge_upsert,
+    recover_swap,
+    swap_in,
+    upsert_parquet,
+)
 
 
 def _base(spark):
@@ -59,8 +66,8 @@ def test_merge_upsert_schema_evolution(spark):
 def test_upsert_parquet_in_place(spark, tmp_path):
     path = str(tmp_path / "nodes")
     _base(spark).write.parquet(path)
-    n = upsert_parquet(spark, path, _updates(spark), ["uri"])
-    assert n == 4
+    upsert_parquet(spark, path, _updates(spark), ["uri"])
+    assert spark.read.parquet(path).count() == 4
     back = {r["uri"]: r["label"] for r in spark.read.parquet(path).collect()}
     assert back == {"u1": "alpha", "u2": "BETA", "u3": None, "u4": "delta"}
     # crash-safe swap leaves no droppings
@@ -68,21 +75,48 @@ def test_upsert_parquet_in_place(spark, tmp_path):
     assert not os.path.exists(path + "__old")
 
 
-def test_compact_parquet(spark, tmp_path):
-    """Small-file compaction (sources/partitioned.py): 16 writer files
-    collapse to 1, rows intact, crash-safe swap leaves no droppings."""
-    from esco_neo4j_spark.sources.partitioned import compact_parquet
+def test_upsert_parquet_creates_missing_table(spark, tmp_path):
+    """A missing table is created from the updates, deduplicated on the
+    key — the first batch of every upserting sink."""
+    path = str(tmp_path / "nodes")
+    upd = _updates(spark).unionByName(_updates(spark))
+    upsert_parquet(spark, path, upd, ["uri"])
+    got = sorted(r["uri"] for r in spark.read.parquet(path).collect())
+    assert got == ["u2", "u3", "u4"]
+    assert not os.path.exists(path + "__merging")
 
-    path = str(tmp_path / "frag")
-    df = spark.range(10_000).withColumnRenamed("id", "k")
-    df.repartition(16).write.parquet(path)
-    before = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    assert before == 16
-    n_files = compact_parquet(spark, path)
-    assert n_files == 1
-    assert spark.read.parquet(path).count() == 10_000
-    assert not os.path.exists(path + "__compacting")
+
+def _failing_write(spark):
+    """A ``swap_in`` writer that lands a few rows in the scratch dir and
+    then dies, like a job that fails mid-write."""
+
+    def write(tmp):
+        spark.range(3).write.parquet(tmp)
+        raise RuntimeError("write failed")
+
+    return write
+
+
+def test_swap_in_failed_first_write_leaves_nothing(spark, tmp_path):
+    """A failed write with no live table must not leave a partial
+    ``__merging`` dir that the next recover_swap would promote."""
+    path = str(tmp_path / "cells")
+    with pytest.raises(RuntimeError, match="write failed"):
+        swap_in(path, _failing_write(spark))
+    assert not os.path.exists(path + "__merging")
+    recover_swap(path)  # what the next batch does first
+    assert not os.path.exists(path)
+
+
+def test_swap_in_failed_write_keeps_live_table(spark, tmp_path):
+    path = str(tmp_path / "nodes")
+    _base(spark).write.parquet(path)
+    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    with pytest.raises(RuntimeError, match="write failed"):
+        swap_in(path, _failing_write(spark))
+    assert not os.path.exists(path + "__merging")
     assert not os.path.exists(path + "__old")
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
 
 
 def test_write_with_observed_metrics(spark, tmp_path):
