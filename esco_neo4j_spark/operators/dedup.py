@@ -96,30 +96,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def minhash_signature(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, sig array<bigint>) — minhash signature over WORD shingles.
-
-    h_i(s) = ((2i+1) * md5_28(s) + 7919*i + 1) mod (2^31-1); sig[i] =
-    min over shingles. Pure column expressions -> whole-stage codegen.
-    Word shingles (Broder), not char n-grams: char shingles saturate on
-    small alphabets and collapse every LSH bucket (measured: 377 distinct
-    char-3-grams corpus-wide vs 27k word-3-shingles on the test corpus).
-    Tokens, shingles, and md5 hashes are each staged into their own
-    projection so the expensive steps evaluate once per row instead of
-    once per (row x hash-permutation) — see ``shingled``.
-    """
-    hashed = shingled(df, text_col, id_col, shingle_n).select(
-        "id", F.transform("sh", md5_int28).alias("hs")
-    )
-    return _minhash_sig_from_hashed(hashed, num_hashes)
-
-
 def _minhash_sig_from_hashed(hashed: DataFrame, num_hashes: int) -> DataFrame:
     """(id, hs array<bigint>) -> (id, sig array<bigint>)."""
 

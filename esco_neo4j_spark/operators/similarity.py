@@ -13,7 +13,9 @@ Reference behavior being replicated:
 Scale notes:
 - brute_force_topk: one scan, no shuffle; top-k via TakeOrderedAndProject
   (per-partition heaps merged at the driver) — the full score column is
-  never materialized.
+  never materialized. A bare parquet scan under driver_tier.MAX_BYTES
+  (brute_force_topk, lsh_topk) is instead served from a driver-resident
+  matrix with no Spark job, rows bit-identical (operators/driver_tier.py).
 - cosine_self_join uses a block-key equi-join when given one; otherwise it
   is an explicit O(N^2) crossJoin — fine for anchored joins, wrong for
   all-pairs at scale (use lsh_self_join).
@@ -24,26 +26,36 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import random
 from collections.abc import Sequence
 
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from esco_neo4j_spark.functions.vector import cosine_similarity, dot_product
+from esco_neo4j_spark.operators import driver_tier, vecfold
+
+# The Arrow UDFs below call vecfold on the executors, whose Python
+# workers need not be able to import this package: ship it by value.
+cloudpickle.register_pickle_by_value(vecfold)
 
 
 def _anchor_cosine_pudf(query_vec: Sequence[float]):
     """Arrow-batched twin of ``cosine_similarity(col, literal_query)`` —
     the broadcast-anchor scoring path (one column in, the query vector
-    baked into the UDF closure). Same sequential float64 folds as the
-    zip_with/aggregate chain (and the oracle's left-associated SQL), so
-    scores are bit-identical and no oracle changes. RAW double out; the
-    6dp rounding + threshold stay JVM-side. NULL embedding => NULL out
-    (object dtype — a float Series would coerce None to NaN, and Spark
-    sorts NaN ABOVE all doubles, silently passing > threshold filters);
+    baked into the UDF closure): a thin wrapper over ``vecfold.cosine``,
+    the same sequential float64 folds as the zip_with/aggregate chain
+    (and the oracle's left-associated SQL), so scores are bit-identical
+    and no oracle changes. RAW double out; the 6dp rounding + threshold
+    stay JVM-side. NULL embedding => NULL out (object dtype — a float
+    Series would coerce None to NaN, and Spark sorts NaN ABOVE all
+    doubles, silently passing > threshold filters); a row with a NULL
+    (Arrow hands it to numpy as NaN) or non-finite element is masked
+    back to NULL, as the chain's null product poisoned the fold;
     zero-norm => 0/0 = NaN in the kernel, which Arrow's object-dtype
     conversion hands back to Spark as NULL (pandas missing-value
     semantics) — the serve-side CASE twin (sources/ann_index.py
@@ -57,11 +69,7 @@ def _anchor_cosine_pudf(query_vec: Sequence[float]):
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    acc = 0.0
-    for j in range(q.shape[0]):  # sequential scalar fold == l2_norm(q)
-        acc += q[j] * q[j]
-    q_norm = float(np.sqrt(acc))
+    q = [float(x) for x in query_vec]
 
     @pandas_udf("double")
     def anchor_cos(vecs: pd.Series) -> pd.Series:
@@ -71,21 +79,7 @@ def _anchor_cosine_pudf(query_vec: Sequence[float]):
             x = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in vecs[mask]]
             )
-            dot = np.zeros(x.shape[0])
-            nx = np.zeros(x.shape[0])
-            for j in range(x.shape[1]):  # sequential folds (bit-exact
-                dot += x[:, j] * q[j]  # vs the HOF/SQL chain)
-                nx += x[:, j] * x[:, j]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                score = dot / (np.sqrt(nx) * q_norm)
-            # Arrow hands NULL array *elements* to numpy as NaN; the
-            # zip_with/aggregate chain scored such arrays NULL (null
-            # product poisons the fold), and a NaN score would sort
-            # ABOVE every real double and pass `> threshold`. Mask
-            # rows with any non-finite element back to NULL; a NaN
-            # *computed* from a finite zero-norm vector (0/0) stays,
-            # matching the expression path's division.
-            out[mask] = score
+            out[mask] = vecfold.cosine(x, q)
             mask = mask.copy()
             mask[mask] = np.isfinite(x).all(axis=1)
         data = np.empty(len(vecs), dtype=object)
@@ -108,11 +102,20 @@ def brute_force_topk(
 
     Matches reference src/semantic_search.py:61-71 semantics: null
     embeddings filtered, threshold applied, score-desc order, limit k.
-    Deterministic tiebreak on id for oracle-stable output. Scoring runs
+    Deterministic tiebreak on id for oracle-stable output.
+
+    Two tiers, bit-identical rows: a bare parquet scan of at most
+    ``driver_tier.MAX_BYTES`` is served from a driver-resident matrix
+    with no Spark job (operators/driver_tier.py); any other input runs
     the Arrow anchor-cosine fold (bit-exact vs the column-expression
-    chain; see _anchor_cosine_pudf) — the HOF chain is interpreted and
-    measured ~4× slower.
+    chain; see _anchor_cosine_pudf — the HOF chain is interpreted and
+    measured ~4× slower) under TakeOrderedAndProject.
     """
+    m = driver_tier.scan_matrix(embeddings, id_col, vec_col, len(query_vec))
+    if m is not None and k >= 0:
+        return driver_tier.topk(
+            embeddings.sparkSession, m, id_col, query_vec, k, threshold
+        )
     score = F.round(_anchor_cosine_pudf(query_vec)(F.col(vec_col)), 6)
     out = (
         embeddings.filter(F.col(vec_col).isNotNull())
@@ -164,6 +167,18 @@ def cosine_self_join(
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
+
+
+@functools.lru_cache(maxsize=8)
+def _plane_matrix(dim: int, n_planes: int, seed: int):
+    """``_hyperplanes`` as a read-only float64 matrix, drawn once per
+    (dim, n_planes, seed): the draw is a Python loop over dim x n_planes
+    gaussians (~50 ms at 384 dims x 280 planes), else paid per request."""
+    import numpy as np
+
+    planes = np.asarray(_hyperplanes(dim, n_planes, seed), dtype=np.float64)
+    planes.setflags(write=False)
+    return planes
 
 
 def derive_lsh_params(
@@ -247,7 +262,8 @@ def _table_buckets(
 
 def _all_buckets_pudf(dim: int, n_planes: int, n_tables: int, seed: int):
     """Arrow-batched twin of ``_table_buckets``: ONE pandas_udf returning
-    all ``n_tables`` bucket ids per row as array<bigint>.
+    all ``n_tables`` bucket ids per row as array<bigint>, a thin wrapper
+    over ``vecfold.sign_buckets``.
 
     Why it exists (r5): the per-table column expressions cost
     n_planes x n_tables interpreted higher-order-function folds per row
@@ -257,10 +273,10 @@ def _all_buckets_pudf(dim: int, n_planes: int, n_tables: int, seed: int):
     candidates. One numpy matvec batch replaces them all.
 
     Bit-exactness contract (what lets the DuckDB oracle replay stand):
-    the dot is accumulated SEQUENTIALLY over dimensions in float64
-    (acc += v[:, j] * p[j]), the same left fold as functions/vector.py's
-    F.aggregate chain and the oracle's left-associated ``v[1]*p1 + ...``
-    SQL (plans/vector_queries.py:_lsh_bucket_sql) — identical operation
+    the dot is accumulated SEQUENTIALLY over dimensions in float64, the
+    same left fold as functions/vector.py's F.aggregate chain and the
+    oracle's left-associated ``v[1]*p1 + ...`` SQL
+    (plans/vector_queries.py:_lsh_bucket_sql) — identical operation
     order => bit-identical doubles => identical sign bits. A NULL vector
     keeps the expression path's behavior: every WHEN(NULL >= 0) bit is
     0, so the row lands in bucket 0 of every table (and is later dropped
@@ -269,10 +285,7 @@ def _all_buckets_pudf(dim: int, n_planes: int, n_tables: int, seed: int):
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    planes = np.asarray(
-        _hyperplanes(dim, n_planes * n_tables, seed), dtype=np.float64
-    )
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
+    planes = _plane_matrix(dim, n_planes * n_tables, seed)
 
     @pandas_udf("array<bigint>")
     def all_buckets(vecs: pd.Series) -> pd.Series:
@@ -282,13 +295,7 @@ def _all_buckets_pudf(dim: int, n_planes: int, n_tables: int, seed: int):
             x = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in vecs[mask]]
             )
-            dots = np.zeros((x.shape[0], planes.shape[0]))
-            for j in range(dim):  # sequential fold: bit-exact vs the
-                dots += np.outer(x[:, j], planes[:, j])  # HOF/SQL chain
-            bits = (dots >= 0).astype(np.int64)
-            out[mask] = (
-                bits.reshape(x.shape[0], n_tables, n_planes) @ weights
-            )
+            out[mask] = vecfold.sign_buckets(x, planes, n_planes)
         return pd.Series(list(out))
 
     return all_buckets
@@ -354,19 +361,26 @@ def lsh_topk(
     banding trade-off dial. A single k-plane table at cosine 0.45 keeps
     only ~18% of true neighbors; 8 tables of 4 planes keep ~80%+.
 
-    At 100 TB each table's bucket id is a partition column, so the probe
-    reads ~L/2^k of the data.
+    Two tiers, identical candidates and rows: a bare parquet scan of at
+    most ``driver_tier.MAX_BYTES`` is served from a driver-resident
+    matrix whose row bucket ids are computed once per
+    ``(n_planes, n_tables, seed)`` and cached with it (no Spark job per
+    request); any other input recomputes every row's bucket ids per
+    request in one Arrow UDF pass and filters on them — there is no
+    bucket column or partition layout to prune with.
     """
+    import numpy as np
+
     dim = len(query_vec)
-    all_planes = _hyperplanes(dim, n_planes * n_tables, seed)
-    qbuckets = []
-    for t in range(n_tables):
-        planes = all_planes[t * n_planes:(t + 1) * n_planes]
-        qbucket = 0
-        for i, p in enumerate(planes):
-            if sum(x * y for x, y in zip(p, query_vec)) >= 0:
-                qbucket |= 1 << i
-        qbuckets.append(qbucket)
+    planes = _plane_matrix(dim, n_planes * n_tables, seed)
+    q = np.asarray([[float(x) for x in query_vec]])
+    qbuckets = vecfold.sign_buckets(q, planes, n_planes)[0]
+    m = driver_tier.scan_matrix(embeddings, id_col, vec_col, dim)
+    if m is not None and k >= 0:
+        rows = driver_tier.lsh_candidates(m, planes, n_planes, seed, qbuckets)
+        return driver_tier.topk(
+            embeddings.sparkSession, m, id_col, query_vec, k, rows=rows
+        )
     # probe via the Arrow bucket UDF (r5): the expression form evaluated
     # n_planes x n_tables interpreted HOF dots per row AS A FILTER —
     # 45.8s at the sf1 audit with derived (10, 20); one Arrow batch per
@@ -374,7 +388,7 @@ def lsh_topk(
     # _all_buckets_pudf), so the candidate set — and the SQL oracle —
     # is unchanged. 7.2s after (and 3.1s for the recall eval, from 43.8).
     all_buckets = _all_buckets_pudf(dim, n_planes, n_tables, seed)
-    qb = F.array(*[F.lit(q).cast("bigint") for q in qbuckets])
+    qb = F.array(*[F.lit(int(b)).cast("bigint") for b in qbuckets])
     match_any = F.exists(
         F.zip_with(all_buckets(F.col(vec_col)), qb, lambda b, q: b == q),
         lambda x: x,

@@ -471,17 +471,6 @@ def ensure_layered_index(
     return index_dir
 
 
-def load_layer(
-    spark: SparkSession, index_dir: str, stride: int
-) -> DataFrame:
-    """(src, nbr) edges of one stored layer — partition-pruned scan."""
-    return (
-        spark.read.parquet(os.path.join(_layers_path(index_dir), "graph"))
-        .filter(F.col("stride") == stride)
-        .select("src", "nbr")
-    )
-
-
 def _pruned_edges(
     spark: SparkSession, ix: _IndexHandle, stride: int, ids: list[int]
 ):
@@ -946,7 +935,7 @@ def serve_layered_batch(
             for r in _pruned_src_edges(spark, ix, 1, miss).collect():
                 fetched[r["src"]].add(r["nbr"])
             edge_memo.update(fetched)
-        return edge_memo
+        return {i: edge_memo[i] for i in ids}
 
     entries: list[list[int]] | None = None
     for layer in manifest["layers"]:

@@ -91,27 +91,3 @@ def live_layer_edges(
     return spark.read.parquet(
         os.path.join(_layer_dir(index_dir, stride), "edges")
     )
-
-
-def layered_index_sink(
-    stream_vecs: DataFrame,
-    index_dir: str,
-    checkpoint: str,
-    dim: int,
-    layers: list[dict],
-    **kwargs,
-):
-    """foreachBatch wrapper over process_layered_knn_batch. Returns the
-    started StreamingQuery (the knn_index_sink convention)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_layered_knn_batch(
-            batch_df, index_dir, dim, layers, **kwargs
-        )
-
-    return (
-        stream_vecs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

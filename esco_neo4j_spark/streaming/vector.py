@@ -17,14 +17,14 @@ the Structured Streaming face, the vector twin of streaming/dedup.py:
   at-least-once delivery, the upsert_sink recipe;
 - ``index_dir/cells`` (per-cell row counts — the stats a planner needs
   to pick nprobe) is recomputed from the upserted assignments, which
-  makes it idempotent BY CONSTRUCTION under replay; at 100 TB the
-  assignments table is written partitioned by ``cell`` and the counts
-  roll up with the incremental-agg-merge recipe
-  (events_incremental_agg_merge) instead of a rescan;
+  makes it idempotent BY CONSTRUCTION under replay. ``assignments`` is
+  one unpartitioned table: a Spark-tier probe filters ``cell`` after a
+  full scan, and the counts come from a rescan of it;
 - ``ivf_index_probe`` is the read face: nearest ``nprobe`` centroids to
-  the query are picked driver-side (k tiny), the assignments read is
-  PRUNED to those cells (partition pruning at scale), and candidates
-  re-rank exactly.
+  the query are picked driver-side (k tiny), then the rows of those
+  cells re-rank exactly — from a driver-resident copy of
+  ``assignments`` when it fits ``driver_tier.MAX_BYTES`` (no Spark
+  job), otherwise in a Spark scan filtered on ``cell``.
 
 Stream == batch contract (pinned in tests/test_streaming.py): after any
 sequence of micro-batches, ``assignments`` equals
@@ -39,6 +39,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from esco_neo4j_spark.operators import driver_tier
 from esco_neo4j_spark.operators.similarity import (
     brute_force_topk,
     ivf_assign_with_centroids,
@@ -223,11 +224,16 @@ def ivf_index_probe(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k over the maintained index: rank centroids against the query
-    DRIVER-side (len(centroids) rows — bounded), read assignments pruned
-    to the ``nprobe`` nearest cells, re-rank candidates exactly. At
-    100 TB the cell filter is partition pruning on the assignments
-    layout; everything else is the batch ivf_topk plan."""
+    DRIVER-side (len(centroids) rows — bounded), keep the rows of the
+    ``nprobe`` nearest cells, re-rank them exactly. An ``assignments``
+    table within ``driver_tier.MAX_BYTES`` is served from the driver
+    tier (operators/driver_tier.py, no Spark job); a larger one is a
+    full scan filtered on ``cell`` — the table is not partitioned, so
+    nothing is pruned — re-ranked by brute_force_topk. Both tiers
+    return bit-identical rows."""
     import math
+
+    import numpy as np
 
     def cos(a, b):
         dot = sum(x * y for x, y in zip(a, b))
@@ -242,6 +248,12 @@ def ivf_index_probe(
     probe_cells = [r["cid"] for r in ranked[:nprobe]]
     assign_path, _ = _paths(index_dir)
     recover_swap(assign_path)
+    m = driver_tier.dir_matrix(
+        assign_path, id_col, vec_col, len(query_vec), ("cell",)
+    )
+    if m is not None and k >= 0:
+        rows = np.flatnonzero(np.isin(m.extra["cell"], probe_cells))
+        return driver_tier.topk(spark, m, id_col, query_vec, k, rows=rows)
     cand = spark.read.parquet(assign_path).filter(
         F.col("cell").isin(probe_cells)
     )

@@ -38,3 +38,25 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     yield con
     con.close()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), n)``: n is the number of Spark jobs
+    ``fn`` started, read from the status store through a job group of
+    its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        gid = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, gid)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return run

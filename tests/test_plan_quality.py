@@ -52,11 +52,32 @@ def test_dim_join_broadcasts(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_topk_avoids_full_sort(spark):
+def test_topk_avoids_full_sort(spark, monkeypatch):
+    # the sf0.001 table is below the driver tier's limit; a limit of 0
+    # pins the plan every larger table gets
+    from esco_neo4j_spark.operators import driver_tier
+
+    monkeypatch.setattr(driver_tier, "MAX_BYTES", 0)
     plan = _plan(spark, "vec_cosine_topk")
     assert "TakeOrderedAndProject" in plan, (
         "ORDER BY+LIMIT must plan as top-k, not global sort"
     )
+
+
+def test_small_topk_is_served_without_a_job(spark, count_jobs):
+    # below the limit the same query is a LocalRelation computed on the
+    # driver: past the query's one-row anchor lookup, building and
+    # collecting it starts no Spark job
+    from esco_neo4j_spark.plans.vector_queries import _anchor_vec
+
+    q = REGISTRY["vec_cosine_topk"]
+    df, build_jobs = count_jobs(lambda: q.fn(spark, SF_DIR))
+    _, anchor_jobs = count_jobs(lambda: _anchor_vec(spark))
+    rows, collect_jobs = count_jobs(df.collect)
+    assert df._jdf.queryExecution().optimizedPlan().nodeName() == (
+        "LocalRelation"
+    )
+    assert rows and build_jobs == anchor_jobs and collect_jobs == 0
 
 
 def test_agg_partial_and_codegen(spark):

@@ -1083,3 +1083,253 @@ def test_knn_graph_ring_descent_identity(spark, tmp_path):
     ref_overlap = len(ref_set & exact_set) / len(exact_set)
     assert ref_overlap > ring_overlap, (ref_overlap, ring_overlap)
     assert ref_overlap >= 0.6, ref_overlap
+
+
+def _tier_table(path):
+    """A parquet table (a bare scan once read back) with every shape the
+    two serving tiers must agree on: string ids, NULL embeddings, a NULL
+    element, a zero-norm vector, a non-finite element, and six rows
+    whose scores tie after 6-dp rounding while their raw scores fall in
+    the opposite order of their ids."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(5)
+    d = 8
+    vecs = [list(map(float, v)) for v in rng.standard_normal((40, d))]
+    base = [1.0, 0.5, -0.25, 0.0, 0.75, 0.1, -0.6, 0.3]
+    for j in range(6):  # ids t0..t5: raw scores descend as ids ascend
+        vecs[j] = [x + (5 - j) * 1e-9 * (i % 2) for i, x in enumerate(base)]
+    vecs[6] = None
+    vecs[7] = [0.0] * d
+    vecs[8] = [1.0, None] + [0.5] * (d - 2)
+    vecs[9] = [float("inf")] + [0.5] * (d - 1)
+    vecs[10] = None
+    ids = [f"t{j}" for j in range(6)] + [f"r{j:02d}" for j in range(34)]
+    t = pa.table({
+        "vid": pa.array(ids),
+        "emb": pa.array(vecs, type=pa.list_(pa.float32())),
+    })
+    pq.write_table(t, path)
+    return base
+
+
+def _both_tiers(monkeypatch, build):
+    """(driver-tier DataFrame, Spark-tier DataFrame) of ``build()``."""
+    from esco_neo4j_spark.operators import driver_tier
+
+    driver = build()
+    with monkeypatch.context() as mp:
+        mp.setattr(driver_tier, "MAX_BYTES", 0)
+        spark_tier = build()
+    return driver, spark_tier
+
+
+def _schema(df):
+    return [(f.name, f.dataType, f.nullable) for f in df.schema.fields]
+
+
+def _plan_node(df):
+    return df._jdf.queryExecution().optimizedPlan().nodeName()
+
+
+def test_driver_tier_matches_spark_tier(spark, tmp_path, monkeypatch):
+    """Row-for-row and schema parity of the driver-resident tier against
+    the Spark tier on a bare parquet scan: NULL embeddings dropped, NULL
+    element / zero-norm / non-finite rows score NULL and sort last,
+    6-dp ties across the k boundary break on id, threshold drops NULL,
+    k > rows, and an empty table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "tier.parquet")
+    q = _tier_table(path)
+    df = spark.read.parquet(path)
+    cases = []
+    for k in (0, 1, 3, 8, 100):
+        for thr in (None, 0.1, -2.0):
+            cases.append((k, lambda k=k, thr=thr: brute_force_topk(
+                df, q, k=k, threshold=thr, id_col="vid", vec_col="emb")))
+        cases.append((k, lambda k=k: lsh_topk(
+            df, q, k=k, n_planes=3, n_tables=4, id_col="vid", vec_col="emb")))
+    cases.append((5, lambda: brute_force_topk(
+        df, [0.0] * len(q), k=5, id_col="vid", vec_col="emb")))
+    for k, build in cases:
+        driver, spark_tier = _both_tiers(monkeypatch, build)
+        assert _plan_node(driver) == "LocalRelation"
+        # (Catalyst itself folds a LIMIT 0 to an empty LocalRelation)
+        assert k == 0 or _plan_node(spark_tier) != "LocalRelation"
+        assert _schema(driver) == _schema(spark_tier)
+        assert driver.collect() == spark_tier.collect()
+    top = brute_force_topk(df, q, k=3, id_col="vid", vec_col="emb").collect()
+    assert [r["vid"] for r in top] == ["t0", "t1", "t2"]
+    assert len({r["score"] for r in top}) == 1
+    every = brute_force_topk(df, q, k=100, id_col="vid", vec_col="emb")
+    tail = every.collect()[-3:]
+    assert [(r["vid"], r["score"]) for r in tail] == [
+        ("r01", None), ("r02", None), ("r03", None)
+    ]
+
+    empty = str(tmp_path / "empty.parquet")
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array([], type=pa.int64()),
+            "embedding": pa.array([], type=pa.list_(pa.float32())),
+        }),
+        empty,
+    )
+    edf = spark.read.parquet(empty)
+    for build in (
+        lambda: brute_force_topk(edf, q, k=5),
+        lambda: lsh_topk(edf, q, k=5, n_planes=3, n_tables=4),
+    ):
+        driver, spark_tier = _both_tiers(monkeypatch, build)
+        assert _plan_node(driver) == "LocalRelation"
+        assert _schema(driver) == _schema(spark_tier)
+        assert driver.collect() == spark_tier.collect() == []
+
+
+def test_driver_tier_runs_no_spark_job(spark, emb, anchor, count_jobs):
+    """A top-k request over a small bare scan, exact or LSH, is scored on
+    the driver: building and collecting it starts no Spark job."""
+    for build in (
+        lambda: brute_force_topk(emb, anchor, k=10, threshold=0.2),
+        lambda: lsh_topk(emb, anchor, k=10, n_planes=5, n_tables=18),
+    ):
+        build().collect()  # first request loads the matrix
+        rows, jobs = count_jobs(lambda: build().collect())
+        assert rows and jobs == 0
+
+
+def test_driver_tier_serves_rewritten_table(spark, tmp_path):
+    """A table rewritten in place (new file stamp) replaces its cached
+    matrix: the next request serves the new rows, never the old ones —
+    for a single file and for a Spark-written directory whose part
+    files change names."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    q = [1.0, 0.0, 0.0]
+
+    def write_file(path, rows):
+        pq.write_table(pa.table({
+            "vec_id": pa.array([r[0] for r in rows], type=pa.int64()),
+            "embedding": pa.array(
+                [r[1] for r in rows], type=pa.list_(pa.float32())),
+        }), path)
+
+    def write_dir(path, rows):
+        spark.createDataFrame(
+            rows, "vec_id bigint, embedding array<float>"
+        ).coalesce(1).write.mode("overwrite").parquet(path)
+
+    for write, path in (
+        (write_file, str(tmp_path / "one.parquet")),
+        (write_dir, str(tmp_path / "dir")),
+    ):
+        write(path, [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])])
+        first = brute_force_topk(spark.read.parquet(path), q, k=1).collect()
+        assert [r["vec_id"] for r in first] == [1]
+        write(path, [(7, [1.0, 0.1, 0.0]), (8, [0.0, 0.0, 1.0]),
+                     (9, [0.5, 0.5, 0.0])])
+        again = brute_force_topk(spark.read.parquet(path), q, k=3).collect()
+        assert [r["vec_id"] for r in again] == [7, 9, 8]
+
+
+def test_spark_round6_matches_spark_round(spark):
+    """The driver tier's rounding replica equals Spark's round(x, 6)
+    (HALF_UP on the double's decimal string) bit for bit, over random
+    doubles, exact .5e-6 decimal ties of both signs, values far from
+    [-1, 1], signed zeros and non-finite values."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from esco_neo4j_spark.operators.driver_tier import spark_round6
+
+    rng = np.random.default_rng(11)
+    n = rng.integers(-1_500_000, 1_500_000, 6000)
+    vals = np.concatenate([
+        rng.uniform(-1.5, 1.5, 6000),
+        [float(f"{i}5e-7") for i in n],  # x.xxxxxx5: exact decimal ties
+        [float(f"{i}e-6") for i in n],
+        rng.uniform(-1e6, 1e6, 500),
+        rng.uniform(-1e-5, 1e-5, 500),
+        [0.0, -0.0, 5e-7, -5e-7, 2.5e-6, 1e300, -1e300, 1e15 + 0.5,
+         float("inf"), float("-inf"), float("nan")],
+    ])
+    assert len(vals) >= 10_000
+    rows = spark.createDataFrame(
+        pa.table({"i": np.arange(len(vals)), "x": vals})
+    ).select("i", F.round("x", 6).alias("r")).collect()
+    want = np.empty(len(vals))
+    for r in rows:
+        want[r["i"]] = r["r"]
+    got = spark_round6(vals)
+    assert np.array_equal(got, want, equal_nan=True)
+    assert np.array_equal(np.signbit(got), np.signbit(want))
+
+
+def test_driver_tier_cache_under_concurrent_requests(tmp_path, monkeypatch):
+    """Threads loading three tables (with LSH buckets) through a cache
+    that holds about two of them: every request gets its own table's
+    rows, and the cache never ends above its limit."""
+    import sys
+    import threading
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from esco_neo4j_spark.operators import driver_tier
+
+    rng = np.random.default_rng(3)
+    d, n_planes = 16, 3
+    planes = rng.standard_normal((n_planes * 4, d))
+    dirs = []
+    for t in range(3):
+        path = tmp_path / f"idx{t}"
+        path.mkdir()
+        vecs = rng.standard_normal((500, d)).astype(np.float32)
+        pq.write_table(pa.table({
+            "vec_id": pa.array(np.arange(500) + 1000 * t),
+            "embedding": pa.array(list(vecs), type=pa.list_(pa.float32())),
+            "cell": pa.array(np.arange(500) % 4),
+        }), str(path / "part-0.parquet"))
+        dirs.append(str(path))
+    entry = 500 * (d * 4 + 8 + 8 + 1 + 8)
+    monkeypatch.setattr(driver_tier, "MAX_BYTES", 2 * entry + 500 * 4 * 8)
+    errors = []
+
+    def worker(seed):
+        r = np.random.default_rng(seed)
+        try:
+            for _ in range(60):
+                t = int(r.integers(3))
+                m = driver_tier.dir_matrix(
+                    dirs[t], "vec_id", "embedding", d, ("cell",)
+                )
+                assert m is not None and m.ids[0] == 1000 * t
+                q = driver_tier.vecfold.sign_buckets(
+                    r.standard_normal((1, d)), planes, n_planes
+                )[0]
+                rows = driver_tier.lsh_candidates(m, planes, n_planes, 1, q)
+                assert rows.max(initial=0) < 500
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[0]
+    cached = sum(e.nbytes for e in driver_tier._CACHE.values())
+    assert 0 < cached <= driver_tier.MAX_BYTES

@@ -1066,3 +1066,61 @@ def test_knn_reingest_changed_embedding_is_ignored(spark, tmp_path):
         for r in spark.read.parquet(index_dir + "/edges").collect()
     }
     assert edges_before <= edges_after or len(edges_after) >= len(edges_before)
+
+
+def test_ivf_probe_driver_tier(spark, tmp_path, monkeypatch, count_jobs):
+    """A probe of an index within the driver tier's limit is served from
+    the driver: row for row (and schema) what the Spark tier returns
+    with the limit at 0, with no Spark job per request — and after the
+    next micro-batch rewrites ``assignments``, the new rows are served,
+    never the cached ones."""
+    from pyspark.sql import functions as F
+
+    from esco_neo4j_spark.operators import driver_tier
+    from esco_neo4j_spark.streaming.vector import (
+        ivf_index_probe,
+        process_vector_batch,
+    )
+
+    emb = spark.read.parquet(
+        os.path.join(SF_DIR, "embeddings.parquet")
+    ).select("vec_id", "embedding")
+    centroids = (
+        emb.filter(F.col("embedding").isNotNull())
+        .orderBy("vec_id")
+        .limit(8)
+        .selectExpr("vec_id AS cid", "embedding AS cvec")
+        .collect()
+    )
+    index_dir = str(tmp_path / "index")
+    process_vector_batch(emb.filter("vec_id < 200"), index_dir, centroids)
+    queries = [
+        [float(x) for x in r["embedding"]]
+        for r in emb.filter("vec_id IN (3, 42, 250)").collect()
+    ]
+
+    def probe(q, k=10):
+        return ivf_index_probe(spark, index_dir, centroids, q, k=k, nprobe=3)
+
+    for q in queries:
+        for k in (1, 10, 500):
+            driver = probe(q, k)
+            with monkeypatch.context() as mp:
+                mp.setattr(driver_tier, "MAX_BYTES", 0)
+                spark_tier = probe(q, k)
+                want = spark_tier.collect()
+            assert driver._jdf.queryExecution().optimizedPlan().nodeName() == (
+                "LocalRelation"
+            )
+            assert driver.schema == spark_tier.schema
+            assert driver.collect() == want
+        rows, jobs = count_jobs(lambda: probe(q).collect())
+        assert rows and jobs == 0
+
+    before = {r["vec_id"] for r in probe(queries[2], k=500).collect()}
+    process_vector_batch(emb.filter("vec_id >= 200"), index_dir, centroids)
+    after = probe(queries[2], k=500).collect()
+    with monkeypatch.context() as mp:
+        mp.setattr(driver_tier, "MAX_BYTES", 0)
+        assert after == probe(queries[2], k=500).collect()
+    assert {r["vec_id"] for r in after} - before
