@@ -20,7 +20,8 @@ the driver instead, and run no Spark job at all:
   while every file's ``catalog._path_stamp`` is unchanged — a rewritten
   table replaces its entry — holding the matrix, the row norms and, per
   ``(n_planes, n_tables, seed)``, the LSH bucket ids; all entries
-  together never exceed ``MAX_BYTES``;
+  together never exceed ``CACHE_BYTES``, least recently used evicted
+  first;
 - **score**: operators/vecfold.py, the same sequential float64 fold the
   Spark tier's UDFs call, then ``spark_round6`` (Spark's ``round(x, 6)``)
   — so both tiers return bit-identical rows;
@@ -53,15 +54,23 @@ from esco_neo4j_spark.catalog import _ROWCOUNT_CACHE, _path_stamp
 from esco_neo4j_spark.operators import vecfold
 
 # Largest table (rows x dim x element bytes, from parquet footers) the
-# tier serves, and the most the cache holds in total. Set just under the
-# measured crossover of a COLD request (SCALE.md "Vector search serving
-# tiers"; 4 vCPUs, local[4], 384-dim float32, exact top-10): a request
-# that must load the table costs 421 ms at 25.8 MiB and 1188 ms at
-# 64.5 MiB against 799 ms and 983 ms on the Spark tier — equal near
-# 51 MiB — while a warm request stays ~16x cheaper (38-80 ms) at every
-# size measured up to 129 MiB. Under the limit the tier is no slower
-# than the Spark tier even when every request finds a rewritten table.
+# tier serves. Set just under the measured crossover of a COLD request
+# (SCALE.md "Vector search serving tiers"; 4 vCPUs, local[4], 384-dim
+# float32, exact top-10 — the only shape the crossover was measured at):
+# a request that must load the table costs 421 ms at 25.8 MiB and
+# 1188 ms at 64.5 MiB against 799 ms and 983 ms on the Spark tier —
+# equal near 51 MiB — while a warm request stays ~16x cheaper (38-80 ms)
+# at every size measured up to 129 MiB.
 MAX_BYTES = 48 << 20
+
+# Most the cache holds in total. A search mix alternates between two
+# tables — the vectors exact and LSH requests scan, and the IVF
+# assignments holding the same vectors again — and an entry weighs more
+# than its vectors (ids, norms, LSH bucket ids: at 64 dims and 16 LSH
+# tables, 1.6x). Four limit-sized tables' worth keeps both of two tables
+# at the limit resident, so requests alternating between them never
+# reload either.
+CACHE_BYTES = 4 * MAX_BYTES
 
 _ID_TYPES = {
     pa.int64(): T.LongType(),
@@ -100,8 +109,8 @@ class _Matrix:
 
 def _fits(nbytes: int, keep: _Matrix | None) -> bool:
     """Evict least recently used entries other than ``keep`` until
-    ``nbytes`` more fit under MAX_BYTES; False when they cannot."""
-    while sum(e.nbytes for e in _CACHE.values()) + nbytes > MAX_BYTES:
+    ``nbytes`` more fit under CACHE_BYTES; False when they cannot."""
+    while sum(e.nbytes for e in _CACHE.values()) + nbytes > CACHE_BYTES:
         victim = next((k for k, e in _CACHE.items() if e is not keep), None)
         if victim is None:
             return False
@@ -246,13 +255,13 @@ def lsh_candidates(
 ) -> np.ndarray:
     """Rows sharing the query's bucket in at least one table; the row
     buckets are computed once per (n_planes, n_tables, seed) and kept
-    with the matrix while the cache has room for them."""
+    with the matrix while it is cached and the cache has room for them."""
     key = (n_planes, planes.shape[0] // n_planes, seed)
     b = m.buckets.get(key)
     if b is None:
         b = vecfold.sign_buckets(m.x, planes, n_planes)
         with _LOCK:
-            if _fits(b.nbytes, m):
+            if any(e is m for e in _CACHE.values()) and _fits(b.nbytes, m):
                 m.buckets[key] = b
     return np.flatnonzero((b == qbuckets).any(axis=1))
 

@@ -19,17 +19,12 @@ from collections.abc import Sequence
 
 import numpy as np
 
+# Rows per sign_buckets pass: bounds its (rows, planes) float64 dot buffer.
+_BLOCK = 4096
+
 
 def _col(x: np.ndarray, j: int) -> np.ndarray:
     return x[:, j].astype(np.float64, copy=False)
-
-
-def norm(v: Sequence[float]) -> float:
-    """L2 norm of one vector: sequential sum of squares, then sqrt."""
-    acc = 0.0
-    for a in np.asarray(v, dtype=np.float64):
-        acc += a * a
-    return float(np.sqrt(acc))
 
 
 def sq_norms(x: np.ndarray) -> np.ndarray:
@@ -57,12 +52,10 @@ def cosine(
             dot += _col(x, j) * qv[j]
         if sq is None:
             sq = sq_norms(x)
-        return dot / (np.sqrt(sq) * norm(qv))
+        return dot / (np.sqrt(sq) * np.sqrt(sq_norms(qv[None, :])[0]))
 
 
-def sign_buckets(
-    x: np.ndarray, planes: np.ndarray, n_planes: int, block: int = 4096
-) -> np.ndarray:
+def sign_buckets(x: np.ndarray, planes: np.ndarray, n_planes: int) -> np.ndarray:
     """Sign-bit bucket ids, ``(n, n_tables)`` int64: table t of a row is
     sum_i [dot(row, planes[t*n_planes + i]) >= 0] << i, dots folded over
     the first ``planes.shape[1]`` dimensions. A NaN dot (NULL element)
@@ -70,14 +63,14 @@ def sign_buckets(
     n_tables = planes.shape[0] // n_planes
     weights = 1 << np.arange(n_planes, dtype=np.int64)
     out = np.zeros((x.shape[0], n_tables), dtype=np.int64)
-    for lo in range(0, x.shape[0], block):
-        xb = x[lo:lo + block]
+    for lo in range(0, x.shape[0], _BLOCK):
+        xb = x[lo:lo + _BLOCK]
         dots = np.zeros((xb.shape[0], planes.shape[0]))
         with np.errstate(invalid="ignore"):
             for j in range(planes.shape[1]):
                 dots += np.outer(_col(xb, j), planes[:, j])
         bits = (dots >= 0).astype(np.int64)
-        out[lo:lo + block] = (
+        out[lo:lo + _BLOCK] = (
             bits.reshape(xb.shape[0], n_tables, n_planes) @ weights
         )
     return out

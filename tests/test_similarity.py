@@ -1299,7 +1299,7 @@ def test_driver_tier_cache_under_concurrent_requests(tmp_path, monkeypatch):
         }), str(path / "part-0.parquet"))
         dirs.append(str(path))
     entry = 500 * (d * 4 + 8 + 8 + 1 + 8)
-    monkeypatch.setattr(driver_tier, "MAX_BYTES", 2 * entry + 500 * 4 * 8)
+    monkeypatch.setattr(driver_tier, "CACHE_BYTES", 2 * entry + 500 * 4 * 8)
     errors = []
 
     def worker(seed):
@@ -1332,4 +1332,61 @@ def test_driver_tier_cache_under_concurrent_requests(tmp_path, monkeypatch):
     assert not any(th.is_alive() for th in threads)
     assert not errors, errors[0]
     cached = sum(e.nbytes for e in driver_tier._CACHE.values())
-    assert 0 < cached <= driver_tier.MAX_BYTES
+    assert 0 < cached <= driver_tier.CACHE_BYTES
+
+
+def test_driver_tier_cache_keeps_two_limit_sized_tables(tmp_path, monkeypatch):
+    """A search mix alternates between the vectors (exact and LSH) and
+    the IVF assignments: with both tables at the per-table limit (the
+    module's limit-to-budget ratio kept), neither is ever reloaded and
+    the LSH bucket ids are computed once. A matrix already evicted
+    keeps no new bucket ids and evicts nothing."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from esco_neo4j_spark.operators import driver_tier
+
+    rng = np.random.default_rng(4)
+    n, d, n_planes, n_tables = 400, 64, 8, 16
+    planes = rng.standard_normal((n_planes * n_tables, d))
+    vecs = rng.standard_normal((n, d)).astype(np.float32)
+    dirs = {}
+    for name, extra in (("emb", {}), ("ivf", {"cell": np.arange(n) % 4})):
+        path = tmp_path / name
+        path.mkdir()
+        pq.write_table(pa.table({
+            "vec_id": pa.array(np.arange(n)),
+            "embedding": pa.array(list(vecs), type=pa.list_(pa.float32())),
+            **extra,
+        }), str(path / "part-0.parquet"))
+        dirs[name] = str(path)
+    ratio = driver_tier.CACHE_BYTES // driver_tier.MAX_BYTES
+    monkeypatch.setattr(driver_tier, "MAX_BYTES", n * d * 4)
+    monkeypatch.setattr(driver_tier, "CACHE_BYTES", ratio * n * d * 4)
+    monkeypatch.setattr(driver_tier, "_CACHE", type(driver_tier._CACHE)())
+    built = []
+    real = driver_tier.vecfold.sign_buckets
+    monkeypatch.setattr(
+        driver_tier.vecfold, "sign_buckets",
+        lambda *a: built.append(1) or real(*a),
+    )
+    q = real(rng.standard_normal((1, d)), planes, n_planes)[0]
+
+    seen = set()
+    for _ in range(4):
+        m = driver_tier.dir_matrix(dirs["emb"], "vec_id", "embedding", d, ())
+        driver_tier.lsh_candidates(m, planes, n_planes, 1, q)
+        ivf = driver_tier.dir_matrix(
+            dirs["ivf"], "vec_id", "embedding", d, ("cell",)
+        )
+        seen |= {id(m), id(ivf)}
+    assert len(seen) == 2 and len(built) == 1
+    assert len(driver_tier._CACHE) == 2
+
+    key = next(k for k, e in driver_tier._CACHE.items() if e is m)
+    del driver_tier._CACHE[key]
+    monkeypatch.setattr(driver_tier, "CACHE_BYTES", ivf.nbytes)
+    rows = driver_tier.lsh_candidates(m, planes, n_planes, 2, q)
+    assert len(rows) and (n_planes, n_tables, 2) not in m.buckets
+    assert [e is ivf for e in driver_tier._CACHE.values()] == [True]
