@@ -1,7 +1,7 @@
 """Driver-resident serving tier for small-table vector top-k.
 
 A top-k request over a table of a few thousand vectors costs a whole
-Spark job on the Spark tier: an Arrow pandas-UDF pass over every row
+Spark job on the Spark tier: an Arrow UDF pass over every row
 plus TakeOrderedAndProject, ~0.3-0.5 s of scheduling and Python/Arrow
 round trips for well under a millisecond of arithmetic. Below
 ``MAX_BYTES`` the three search entry points (similarity.brute_force_topk,
@@ -14,8 +14,9 @@ the driver instead, and run no Spark job at all:
   query dimension fits ``MAX_BYTES``; every other plan keeps the Spark
   tier;
 - **load**: the id and vector columns are read once with pyarrow from
-  exactly the scan's files, kept in float32 when the column is
-  ``array<float>``, column-major;
+  exactly the scan's files and leave Arrow through ``vecfold.rows``, the
+  boundary the Spark tier's UDFs read through — kept in float32 when the
+  column is ``array<float>``, column-major;
 - **cache**: one entry per table (its root paths and columns), valid
   while every file's ``catalog._path_stamp`` is unchanged — a rewritten
   table replaces its entry — holding the matrix, the row norms and, per
@@ -29,8 +30,8 @@ the driver instead, and run no Spark job at all:
   (``spark.createDataFrame(pyarrow.Table)``), whose collect runs no job.
 
 Semantics kept from the Spark tier: NULL embeddings are dropped; a row
-with a NULL or non-finite element, or a zero-norm row (0/0 — the UDF's
-Arrow conversion hands NaN back as NULL), scores NULL; ``score >
+with a NULL or non-finite element, or a zero-norm row (0/0 — the UDF
+masks a NaN score to NULL), scores NULL; ``score >
 threshold`` drops NULL; order is score descending (NULLs last), then id
 ascending.
 """
@@ -45,7 +46,6 @@ from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -156,7 +156,7 @@ def _matrix(key, files, id_col, vec_col, dim, elem, extra=()):
         )
     except (OSError, KeyError, pa.ArrowException):
         return None
-    vecs = t.column(vec_col).combine_chunks()
+    vecs = t.column(vec_col)
     ids = t.column(id_col)
     if (
         not pa.types.is_list(vecs.type)
@@ -165,15 +165,12 @@ def _matrix(key, files, id_col, vec_col, dim, elem, extra=()):
         or ids.null_count
     ):
         return None
-    keep = vecs.is_valid()
-    t, vecs = t.filter(keep), vecs.filter(keep)
-    if len(vecs) and (
-        pc.min(pc.list_value_length(vecs)).as_py() != dim
-        or pc.max(pc.list_value_length(vecs)).as_py() != dim
-    ):
+    try:
+        keep, x = vecfold.rows(vecs, dim)
+    except ValueError:
         return None
-    x = pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
-    x = np.asfortranarray(x.reshape(len(vecs), dim))
+    t = t.filter(keep)
+    x = np.asfortranarray(x)
     id_np = t.column(id_col).to_numpy()
     if pa.types.is_string(ids.type) or pa.types.is_large_string(ids.type):
         id_np = id_np.astype(str)

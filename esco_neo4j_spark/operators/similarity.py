@@ -21,7 +21,8 @@ Scale notes:
   all-pairs at scale (use lsh_self_join).
 - lsh_topk/lsh_self_join: deterministic hyperplanes derived from a seeded
   RNG on the driver (broadcast as literals), sign-bit bucket key, exact
-  re-rank inside buckets. Multi-probe via allowing hamming-1 neighbors.
+  re-rank inside buckets. A candidate shares the query's bucket exactly
+  in at least one table; there is no multi-probe of neighboring buckets.
 """
 
 from __future__ import annotations
@@ -30,13 +31,13 @@ import functools
 import random
 from collections.abc import Sequence
 
-import pandas as pd
-
+import numpy as np
+import pyarrow as pa
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from esco_neo4j_spark.functions.vector import cosine_similarity, dot_product
+from esco_neo4j_spark.functions.vector import cosine_similarity
 from esco_neo4j_spark.operators import driver_tier, vecfold
 
 # The Arrow UDFs below call vecfold on the executors, whose Python
@@ -51,41 +52,26 @@ def _anchor_cosine_pudf(query_vec: Sequence[float]):
     the same sequential float64 folds as the zip_with/aggregate chain
     (and the oracle's left-associated SQL), so scores are bit-identical
     and no oracle changes. RAW double out; the 6dp rounding + threshold
-    stay JVM-side. NULL embedding => NULL out (object dtype — a float
-    Series would coerce None to NaN, and Spark sorts NaN ABOVE all
-    doubles, silently passing > threshold filters); a row with a NULL
-    (Arrow hands it to numpy as NaN) or non-finite element is masked
-    back to NULL, as the chain's null product poisoned the fold;
-    zero-norm => 0/0 = NaN in the kernel, which Arrow's object-dtype
-    conversion hands back to Spark as NULL (pandas missing-value
-    semantics) — the serve-side CASE twin (sources/ann_index.py
-    `_anchor_score_col`) mirrors that NULL explicitly.
+    stay JVM-side. The score is NULL for a NULL embedding, a row with a
+    NULL or non-finite element (the chain's null product poisoned the
+    fold) and a zero-norm row (0/0 = NaN: Spark sorts NaN ABOVE all
+    doubles, so a NaN would pass > threshold filters) — the serve-side
+    CASE twin (sources/ann_index.py `_anchor_score_col`) spells out the
+    same NULLs.
 
     Why this exists (r5 verdict top item): the interpreted HOF chain is
     the one expression Catalyst cannot codegen — it measured 4× slower
     than its Arrow twin when the pair path was converted, and is the
     flagship H1 scoring path (reference: src/semantic_search.py:61-96).
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     q = [float(x) for x in query_vec]
 
-    @pandas_udf("double")
-    def anchor_cos(vecs: pd.Series) -> pd.Series:
-        mask = vecs.notna().to_numpy()
-        out = np.full(len(vecs), np.nan)
-        if mask.any():
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in vecs[mask]]
-            )
-            out[mask] = vecfold.cosine(x, q)
-            mask = mask.copy()
-            mask[mask] = np.isfinite(x).all(axis=1)
-        data = np.empty(len(vecs), dtype=object)
-        data[mask] = out[mask]
-        data[~mask] = None
-        return pd.Series(data)
+    @F.arrow_udf("double")
+    def anchor_cos(vecs: pa.Array) -> pa.Array:
+        valid, x = vecfold.rows(vecs)
+        out = np.zeros(len(vecs))
+        out[valid] = vecfold.cosine(x, q)
+        return vecfold.scores(out, valid, x)
 
     return anchor_cos
 
@@ -174,8 +160,6 @@ def _plane_matrix(dim: int, n_planes: int, seed: int):
     """``_hyperplanes`` as a read-only float64 matrix, drawn once per
     (dim, n_planes, seed): the draw is a Python loop over dim x n_planes
     gaussians (~50 ms at 384 dims x 280 planes), else paid per request."""
-    import numpy as np
-
     planes = np.asarray(_hyperplanes(dim, n_planes, seed), dtype=np.float64)
     planes.setflags(write=False)
     return planes
@@ -239,33 +223,12 @@ def derive_lsh_params(
     return n_planes, n_tables
 
 
-def lsh_bucket(vec_col, planes: list[list[float]]):
-    """Sign-bit bucket id from random hyperplanes (an integer 0..2^n-1)."""
-    bucket = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        bit = F.when(dot_product(vec_col, p) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bucket + bit.cast("bigint")
-    return bucket
-
-
-def _table_buckets(
-    vec_col, dim: int, n_planes: int, n_tables: int, seed: int
-) -> list:
-    """One sign-bit bucket expression per hash table (independent plane
-    sets sliced from a single seeded stream)."""
-    all_planes = _hyperplanes(dim, n_planes * n_tables, seed)
-    return [
-        lsh_bucket(vec_col, all_planes[t * n_planes:(t + 1) * n_planes])
-        for t in range(n_tables)
-    ]
-
-
 def _all_buckets_pudf(dim: int, n_planes: int, n_tables: int, seed: int):
-    """Arrow-batched twin of ``_table_buckets``: ONE pandas_udf returning
-    all ``n_tables`` bucket ids per row as array<bigint>, a thin wrapper
+    """Arrow-batched bucket ids: ONE arrow_udf returning all
+    ``n_tables`` bucket ids per row as array<bigint>, a thin wrapper
     over ``vecfold.sign_buckets``.
 
-    Why it exists (r5): the per-table column expressions cost
+    Why it exists (r5): per-table column expressions cost
     n_planes x n_tables interpreted higher-order-function folds per row
     (e.g. 320 zip_with+aggregate chains at the sf1-derived (10, 32)),
     which the sf1 audit measured DOMINATING the join at larger derived
@@ -278,66 +241,42 @@ def _all_buckets_pudf(dim: int, n_planes: int, n_tables: int, seed: int):
     oracle's left-associated ``v[1]*p1 + ...`` SQL
     (plans/vector_queries.py:_lsh_bucket_sql) — identical operation
     order => bit-identical doubles => identical sign bits. A NULL vector
-    keeps the expression path's behavior: every WHEN(NULL >= 0) bit is
-    0, so the row lands in bucket 0 of every table (and is later dropped
-    by its NULL verify score), preserving cap-slot occupancy."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    sets no bit (as WHEN(NULL >= 0) would not): the row lands in bucket
+    0 of every table (and is later dropped by its NULL verify score),
+    preserving cap-slot occupancy."""
     planes = _plane_matrix(dim, n_planes * n_tables, seed)
 
-    @pandas_udf("array<bigint>")
-    def all_buckets(vecs: pd.Series) -> pd.Series:
-        mask = vecs.notna().to_numpy()
+    @F.arrow_udf("array<bigint>")
+    def all_buckets(vecs: pa.Array) -> pa.Array:
+        valid, x = vecfold.rows(vecs)
         out = np.zeros((len(vecs), n_tables), dtype=np.int64)
-        if mask.any():
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in vecs[mask]]
-            )
-            out[mask] = vecfold.sign_buckets(x, planes, n_planes)
-        return pd.Series(list(out))
+        out[valid] = vecfold.sign_buckets(x, planes, n_planes)
+        offsets = np.arange(len(vecs) + 1, dtype=np.int32) * n_tables
+        return pa.ListArray.from_arrays(offsets, out.ravel())
 
     return all_buckets
 
 
 def _pair_cosine_pudf():
     """Arrow-batched twin of functions/vector.py:cosine_similarity for
-    the verify join's (va, vb) pairs — RAW double out; the 6dp rounding
-    and threshold comparison stay JVM-side (F.round), so downstream
-    semantics (HALF_UP rounding, NULL-vs-NaN propagation) are untouched.
-    Same sequential float64 folds as the HOF chain => bit-identical
-    scores; NULL on either side => NULL out (dropped by the threshold
-    filter exactly as the expression path did); a zero-norm side yields
-    0.0/0.0 = NaN, matching the double division in the expression."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    the verify join's (va, vb) pairs — RAW double out over
+    ``vecfold.pair_cosine``; the 6dp rounding and threshold comparison
+    stay JVM-side (F.round), so HALF_UP rounding is untouched. Same
+    sequential float64 folds as the HOF chain => bit-identical scores.
+    The score is NULL when either side is NULL, holds a NULL, NaN or
+    infinite element, or has zero norm (0/0): every one of them is
+    dropped by the threshold filter, where a NaN would pass it (Spark
+    orders NaN ABOVE every double)."""
 
-    @pandas_udf("double")
-    def pair_cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        mask = (va.notna() & vb.notna()).to_numpy()
-        out = np.full(len(va), np.nan)
-        if mask.any():
-            a = np.stack([np.asarray(v, dtype=np.float64) for v in va[mask]])
-            b = np.stack([np.asarray(v, dtype=np.float64) for v in vb[mask]])
-            dot = np.zeros(a.shape[0])
-            na = np.zeros(a.shape[0])
-            nb = np.zeros(a.shape[0])
-            for j in range(a.shape[1]):  # sequential folds (see above)
-                dot += a[:, j] * b[:, j]
-                na += a[:, j] * a[:, j]
-                nb += b[:, j] * b[:, j]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                out[mask] = dot / (np.sqrt(na) * np.sqrt(nb))
-        # object dtype so NULL stays NULL (a float Series would coerce
-        # None to NaN — and Spark orders NaN ABOVE every double, so a
-        # null-embedding pair would suddenly PASS the >= threshold
-        # filter); genuine 0/0 NaN from zero-norm vectors stays NaN
-        data = np.empty(len(va), dtype=object)
-        data[mask] = out[mask]
-        data[~mask] = None
-        return pd.Series(data)
+    @F.arrow_udf("double")
+    def pair_cos(va: pa.Array, vb: pa.Array) -> pa.Array:
+        valid_a, xa = vecfold.rows(va)
+        valid_b, xb = vecfold.rows(vb)
+        both = valid_a & valid_b
+        xa, xb = xa[both[valid_a]], xb[both[valid_b]]
+        out = np.zeros(len(va))
+        out[both] = vecfold.pair_cosine(xa, xb)
+        return vecfold.scores(out, both, xa, xb)
 
     return pair_cos
 
@@ -369,8 +308,6 @@ def lsh_topk(
     request in one Arrow UDF pass and filters on them — there is no
     bucket column or partition layout to prune with.
     """
-    import numpy as np
-
     dim = len(query_vec)
     planes = _plane_matrix(dim, n_planes * n_tables, seed)
     q = np.asarray([[float(x) for x in query_vec]])
@@ -536,36 +473,23 @@ def _screen_pack_pudf(mns: list[float], mxs: list[float]):
     Δ/2 for ANY nearest rounding):  l = Σ lo_d·Δ_d·q_d (the per-vector
     cross term of <x̂,ŷ>),  a = Σ |x̂_d|·Δ_d/2 (the per-vector slack
     bound on <x̂, err>),  nh = ||x̂||. Stats rows are exactly the coded
-    rows, so q ∈ [0, 255] by construction — one uint8 byte per dim."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
+    rows, so q ∈ [0, 255] by construction — one uint8 byte per dim
+    (``vecfold.sq8``). Callers pass non-NULL embeddings only."""
     lo = np.asarray(mns, dtype=np.float64)
-    rng = np.asarray(mxs, dtype=np.float64) - lo
-    const = rng == 0
-    Dv = rng / 255.0
+    Dv = (np.asarray(mxs, dtype=np.float64) - lo) / 255.0
 
-    @pandas_udf("struct<code: binary, l: double, a: double, nh: double>")
-    def pack(vecs: pd.Series) -> pd.DataFrame:
-        if len(vecs) == 0:
-            return pd.DataFrame({"code": [], "l": [], "a": [], "nh": []})
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        with np.errstate(invalid="ignore", divide="ignore"):
-            q = np.floor((x - lo) * 255.0 / rng + 0.5)
-        q[:, const] = 0.0
-        qi = q.astype(np.int64)
+    @F.arrow_udf("struct<code: binary, l: double, a: double, nh: double>")
+    def pack(vecs: pa.Array) -> pa.Array:
+        qi = vecfold.sq8(vecfold.rows(vecs, len(lo))[1], mns, mxs)
         xh = lo + qi * Dv
-        d = qi.shape[1]
-        codebytes = qi.astype(np.uint8).tobytes()
-        return pd.DataFrame(
-            {
-                "code": [
-                    codebytes[i * d:(i + 1) * d] for i in range(len(vecs))
-                ],
-                "l": (lo * Dv * qi).sum(axis=1),
-                "a": (np.abs(xh) * (Dv / 2.0)).sum(axis=1),
-                "nh": np.sqrt((xh * xh).sum(axis=1)),
-            }
+        return pa.StructArray.from_arrays(
+            [
+                vecfold.code_array(qi),
+                pa.array((lo * Dv * qi).sum(axis=1)),
+                pa.array((np.abs(xh) * (Dv / 2.0)).sum(axis=1)),
+                pa.array(np.sqrt((xh * xh).sum(axis=1))),
+            ],
+            names=["code", "l", "a", "nh"],
         )
 
     return pack
@@ -588,9 +512,6 @@ def _screen_keep_pudf(mns: list[float], mxs: list[float], threshold: float,
     float evaluation noise, orders of magnitude below the bound's own
     ~0.02 analytic slack. Degenerate lower-bound norms (<= 0) keep the
     pair — the exact verify decides."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     lo = np.asarray(mns, dtype=np.float64)
     Dv = (np.asarray(mxs, dtype=np.float64) - lo) / 255.0
     D2 = Dv * Dv
@@ -599,31 +520,24 @@ def _screen_keep_pudf(mns: list[float], mxs: list[float], threshold: float,
     R = float(np.sqrt(D2.sum()) / 2.0)
     thr = threshold - 1e-6
 
-    @pandas_udf("boolean")
+    @F.arrow_udf("boolean")
     def keep(
-        qa: pd.Series, qb: pd.Series, la: pd.Series, lb: pd.Series,
-        aa: pd.Series, ab: pd.Series, na: pd.Series, nb: pd.Series,
-    ) -> pd.Series:
-        if len(qa) == 0:
-            return pd.Series([], dtype="bool")
-        A = np.frombuffer(b"".join(qa), dtype=np.uint8).reshape(
-            -1, dim
-        ).astype(np.float64)
-        B = np.frombuffer(b"".join(qb), dtype=np.uint8).reshape(
-            -1, dim
-        ).astype(np.float64)
-        ub_dot = (
-            S_ll + la.to_numpy() + lb.to_numpy() + (A * B * D2).sum(axis=1)
-            + aa.to_numpy() + ab.to_numpy() + C
+        qa: pa.Array, qb: pa.Array, la: pa.Array, lb: pa.Array,
+        aa: pa.Array, ab: pa.Array, na: pa.Array, nb: pa.Array,
+    ) -> pa.Array:
+        A = vecfold.codes(qa, dim).astype(np.float64)
+        B = vecfold.codes(qb, dim).astype(np.float64)
+        la, lb, aa, ab, nav, nbv = (
+            c.to_numpy(zero_copy_only=False) for c in (la, lb, aa, ab, na, nb)
         )
-        nav, nbv = na.to_numpy(), nb.to_numpy()
+        ub_dot = S_ll + la + lb + (A * B * D2).sum(axis=1) + aa + ab + C
         lna, lnb = nav - R, nbv - R
         pos = ub_dot >= 0
         denom = np.where(pos, lna * lnb, (nav + R) * (nbv + R))
         degenerate = (pos & ((lna <= 0) | (lnb <= 0))) | (denom <= 0)
         with np.errstate(invalid="ignore", divide="ignore"):
             ub = ub_dot / np.where(denom != 0, denom, 1.0)
-        return pd.Series(degenerate | (ub >= thr))
+        return pa.array(degenerate | (ub >= thr))
 
     return keep
 
@@ -897,15 +811,7 @@ def lsh_knn_graph(
     # UDF as literals so codes are ONE 64-byte binary per vector instead
     # of an array<bigint> — 8× narrower through every join/shuffle and
     # through Arrow (the array form measured 20s+ of transfer at sf1).
-    v = F.col(vec_col)
-    stat_aggs = []
-    for j in range(1, dim + 1):
-        x = F.element_at(v, j).cast("double")
-        stat_aggs.append(F.min(x).alias(f"mn{j}"))
-        stat_aggs.append(F.max(x).alias(f"mx{j}"))
-    srow = nn.agg(*stat_aggs).first()
-    mns = [srow[f"mn{j}"] for j in range(1, dim + 1)]
-    mxs = [srow[f"mx{j}"] for j in range(1, dim + 1)]
+    mns, mxs = _screen_stats(nn, None, vec_col, dim)
     pack = _sq_pack_pudf(mns, mxs)
     codes = nn.select(
         F.col(id_col).alias("id"), pack(F.col(vec_col)).alias("c")
@@ -1048,59 +954,31 @@ def nn_descent_refine(
 def _sq_pack_pudf(mns: list[float], mxs: list[float]):
     """Arrow packer: embedding -> struct(code binary(dim), cn2 bigint).
 
-    Bit-exact twin of sq_quantize's expression chain AND the oracle's
-    SQL: per element v = ((x - mn) * 255.0) / (mx - mn) with the same
-    left-associated double ops, then HALF_UP rounding = floor(v + 0.5)
-    (values are non-negative, so Spark's round(), DuckDB's round() and
-    this floor agree exactly); constant dimensions code to 0. cn2 is the
-    exact integer sum of squared codes."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    The codes are ``vecfold.sq8``, bit-exact twin of sq_quantize's
+    expression chain AND the oracle's SQL; cn2 is the exact integer sum
+    of squared codes. Callers pass non-NULL embeddings only."""
 
-    mn = np.asarray(mns, dtype=np.float64)
-    rng = np.asarray(mxs, dtype=np.float64) - mn
-    const = rng == 0
-
-    @pandas_udf("struct<code: binary, cn2: bigint>")
-    def pack(vecs: pd.Series) -> pd.DataFrame:
-        if len(vecs) == 0:
-            return pd.DataFrame({"code": [], "cn2": []})
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        with np.errstate(invalid="ignore", divide="ignore"):
-            q = np.floor((x - mn) * 255.0 / rng + 0.5)
-        q[:, const] = 0.0
-        qi = q.astype(np.int64)
-        cn2 = (qi * qi).sum(axis=1)
-        codebytes = qi.astype(np.uint8).tobytes()
-        d = qi.shape[1]
-        return pd.DataFrame(
-            {
-                "code": [
-                    codebytes[i * d:(i + 1) * d] for i in range(len(vecs))
-                ],
-                "cn2": cn2,
-            }
+    @F.arrow_udf("struct<code: binary, cn2: bigint>")
+    def pack(vecs: pa.Array) -> pa.Array:
+        qi = vecfold.sq8(vecfold.rows(vecs, len(mns))[1], mns, mxs)
+        return pa.StructArray.from_arrays(
+            [vecfold.code_array(qi), pa.array((qi * qi).sum(axis=1))],
+            names=["code", "cn2"],
         )
 
     return pack
 
 
 def _packed_dot_pudf(dim: int):
-    """Arrow exact integer dot over two binary-packed SQ8 codes: one
-    frombuffer + reshape per batch (no per-row Python), int32 products
-    (dot <= 64 * 255² ≈ 4.2e6 — no overflow), bigint out."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    """Arrow exact integer dot over two binary-packed SQ8 codes: the
+    codes are read as uint8 views of the Arrow buffers (no per-row
+    Python), int32 products (dot <= 64 * 255² ≈ 4.2e6 — no overflow),
+    bigint out."""
 
-    @pandas_udf("bigint")
-    def int_dot(xa: pd.Series, xb: pd.Series) -> pd.Series:
-        if len(xa) == 0:
-            return pd.Series([], dtype="int64")
-        a = np.frombuffer(b"".join(xa), dtype=np.uint8).reshape(-1, dim)
-        b = np.frombuffer(b"".join(xb), dtype=np.uint8).reshape(-1, dim)
-        return pd.Series(
-            (a.astype(np.int32) * b).sum(axis=1).astype(np.int64)
-        )
+    @F.arrow_udf("bigint")
+    def int_dot(xa: pa.Array, xb: pa.Array) -> pa.Array:
+        a, b = vecfold.codes(xa, dim), vecfold.codes(xb, dim)
+        return pa.array((a.astype(np.int32) * b).sum(axis=1).astype(np.int64))
 
     return int_dot
 
@@ -1337,23 +1215,10 @@ def ivf_topk(
     data; the probe-cell filter is a partition-pruning predicate when the
     index is stored partitioned by cell.
     """
-    nq = sum(y * y for y in query_vec) ** 0.5
-    if nq == 0.0:
-        # cosine undefined for a zero-norm query: empty result, stable schema
-        return embeddings.select(
-            F.col(id_col), F.lit(None).cast("double").alias("score")
-        ).limit(0)
     cents = _fetch_centroids(embeddings, n_cells, id_col, vec_col)
-    sims = []
-    for r in cents:
-        c = r["cvec"]
-        nc = sum(x * x for x in c) ** 0.5
-        if nc == 0.0:
-            continue  # zero-norm centroid: cosine undefined, never probed
-        dot = sum(x * y for x, y in zip(c, query_vec))
-        sims.append((dot / (nc * nq), r["cid"]))
-    probe = [cid for _, cid in sorted(sims, key=lambda t: (-t[0], t[1]))[:nprobe]]
-    cand = ivf_assign(embeddings, n_cells, id_col, vec_col).filter(
+    # a zero-norm query probes no cell: empty result, stable schema
+    probe = vecfold.nearest_cells(cents, query_vec, nprobe)
+    cand = ivf_assign_with_centroids(embeddings, cents, id_col, vec_col).filter(
         F.col("cell").isin(probe)
     )
     return brute_force_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
@@ -1605,7 +1470,6 @@ def blocked_cosine_pairs(
     """
     import math
 
-    import numpy as np
     import pandas as pd
 
     emb = embeddings.filter(F.col(vec_col).isNotNull())
@@ -1769,29 +1633,27 @@ def ivfpq_topk(
 
     Scale shape: assignment/encode are narrow maps over literal
     centroids/codebooks (no join, no shuffle — at 100 TB this is the
-    offline index build, written partitioned by cell); the query scans
-    codes only inside probed cells (partition-pruned), touches raw
-    vectors for just ``rerank`` rows, and every driver fetch is bounded
-    (n_cells + n_codes rows)."""
+    offline index build); the query filters the codes to the probed
+    cells after a full scan (nothing here writes a table partitioned by
+    cell, so no file is pruned), touches raw vectors for just
+    ``rerank`` rows, and every driver fetch is bounded (n_cells +
+    n_codes rows)."""
     import math
 
-    nq = sum(float(y) * float(y) for y in query_vec) ** 0.5
-    if nq == 0.0:
-        return embeddings.select(
-            F.col(id_col), F.lit(None).cast("double").alias("score")
-        ).limit(0)
     cents = _fetch_centroids(embeddings, n_cells, id_col, vec_col)
-    if not cents:
-        # empty corpus (no non-null embeddings): no centroids, so the
-        # cvec_expr CASE below would be None and zip_with would raise —
-        # mirror the zero-norm-query early return with an empty frame.
+    # probe: nprobe cells nearest the query (cosine desc, cid asc). None
+    # for a zero-norm query or an empty corpus (no centroids, so the
+    # cvec_expr CASE below would be None and zip_with would raise):
+    # empty result, stable schema.
+    probe = vecfold.nearest_cells(cents, query_vec, nprobe)
+    if not probe:
         return embeddings.select(
             F.col(id_col), F.lit(None).cast("double").alias("score")
         ).limit(0)
     cmap = {r["cid"]: [float(x) for x in r["cvec"]] for r in cents}
-    assign = ivf_assign(embeddings, n_cells, id_col, vec_col).filter(
-        F.col("cell").isNotNull()
-    )
+    assign = ivf_assign_with_centroids(
+        embeddings, cents, id_col, vec_col
+    ).filter(F.col("cell").isNotNull())
     cvec_expr = None
     for cid, cv in cmap.items():
         arr = F.array(*[F.lit(x) for x in cv])
@@ -1844,16 +1706,6 @@ def ivfpq_topk(
             lambda acc, c: F.when(c["d"] < acc["d"], c).otherwise(acc),
         )
         enc = enc.withColumn(f"code_{s}", best["kid"])
-    # probe: nprobe cells nearest the query (cosine desc, cid asc)
-    sims = []
-    for r in cents:
-        c = [float(x) for x in r["cvec"]]
-        nc = sum(x * x for x in c) ** 0.5
-        if nc == 0.0:
-            continue
-        dot = sum(x * float(y) for x, y in zip(c, query_vec))
-        sims.append((dot / (nc * nq), r["cid"]))
-    probe = [cid for _, cid in sorted(sims, key=lambda t: (-t[0], t[1]))[:nprobe]]
 
     def _part_nano(qr_s: list, kv: list) -> int:
         p = 0.0

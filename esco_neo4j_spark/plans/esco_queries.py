@@ -787,10 +787,10 @@ def esco_search_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor_cos = _anchor_cosine_pudf([float(x) for x in anchor_vec])
     # the full-scan zero-norm filter is expressed on the Arrow score
     # instead of re-running the interpreted l2_norm HOF per row: a
-    # zero-norm embedding scores 0/0 = NaN (and ONLY zero-norm does, on
-    # finite inputs), so NOT isnan(score) == l2_norm > 0 — and it must
-    # be explicit because Spark orders NaN above every double, so NaN
-    # rows would otherwise win the top-k.
+    # zero-norm embedding's 0/0 = NaN (and ONLY zero-norm's, on finite
+    # inputs) comes back NULL, which NOT isnan(score) drops, so it
+    # equals l2_norm > 0 — and it stays explicit because Spark orders
+    # NaN above every double, so a NaN score would win the top-k.
     raw = anchor_cos(F.col("embedding"))
     return (
         sk.filter(

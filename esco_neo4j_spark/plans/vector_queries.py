@@ -87,9 +87,9 @@ def _anchor_vec(spark: SparkSession) -> list[float]:
 
 
 def _lsh_bucket_sql(vec_expr: str, planes) -> str:
-    """DuckDB twin of operators/similarity.lsh_bucket for ONE table: the
-    sign-bit bucket as explicit left-associated arithmetic. Spark's
-    dot_product left-folds (0.0 + x1*p1) + x2*p2 + ... in double; the SQL
+    """DuckDB twin of operators/vecfold.sign_buckets for ONE table: the
+    sign-bit bucket as explicit left-associated arithmetic. The kernel
+    left-folds (0.0 + x1*p1) + x2*p2 + ... in double; the SQL
     chain below parses left-associative over the SAME float literals
     (repr round-trips exactly), so both engines produce bit-identical
     dots and therefore identical sign bits — the only place 6dp rounding

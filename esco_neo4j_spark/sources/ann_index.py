@@ -496,20 +496,19 @@ def _pruned_edges(
     )
 
 
-def _anchor_score_col(anchor: list[float]):
-    """The serve-side scoring expression: the pure-JVM
-    ``cosine_similarity`` HOF chain (bit-pinned against the Arrow
-    scorer, tests/test_similarity.py) wrapped with the Arrow scorer's
-    exact NULL contract — any non-finite stored element scores NULL
-    (the pudf masks those rows), and so does a finite zero-norm vector
-    — the pudf computes 0/0 = NaN but Arrow's object-dtype conversion
-    maps NaN to null on the way back (pandas missing-value semantics;
-    verified empirically against the pudf in tests/test_ann_index.py),
-    and spelling it as a CASE arm also keeps ANSI mode from erroring
-    the chain's division. A null element needs no CASE arm: it poisons
-    the fold to NULL on the chain exactly as the pudf returns None for
-    it (a null element also nulls both predicates, falling through to
-    the chain)."""
+def _anchor_score_col(anchor):
+    """The serve-side scoring expression, ``round(cosine_similarity(
+    embedding, anchor), 6)`` on the pure-JVM HOF chain (bit-pinned
+    against the Arrow scorer, tests/test_similarity.py); ``anchor`` is a
+    literal list, or the lambda variable of `_anchor_score_multi_col`.
+    It carries the Arrow scorer's exact NULL contract — any non-finite
+    stored element scores NULL (the UDF masks those rows), and so does a
+    finite zero-norm vector (the UDF masks its 0/0 = NaN; verified
+    against it in tests/test_ann_index.py), and spelling it as a CASE
+    arm also keeps ANSI mode from erroring the chain's division. A null
+    element needs no CASE arm: it poisons the fold to NULL on the chain
+    exactly as the UDF returns NULL for it (a null element also nulls
+    both predicates, falling through to the chain)."""
     from esco_neo4j_spark.functions.vector import cosine_similarity, l2_norm
 
     emb = F.col("embedding")
@@ -783,7 +782,7 @@ def _pruned_src_edges(
 def _anchor_score_multi_col(anchors: list[tuple[int, list[float]]]):
     """`_anchor_score_col` against B anchors as ONE array<double>
     column: transform over an array-of-anchors literal, the SAME
-    chain + NULL wrapper applied per element. One copy of the chain in
+    guarded chain applied per element. One copy of the chain in
     the expression tree instead of B — B separate `_anchor_score_col`
     columns measured ~1.5s of per-job analysis overhead at B=4 (vs
     ~0.6s for one chain), and the per-element lambda keeps the tree
@@ -791,12 +790,6 @@ def _anchor_score_multi_col(anchors: list[tuple[int, list[float]]]):
     growing the plan. Arithmetic per element is the identical fold
     over identical doubles, so scores are bit-identical to the
     single-anchor column (pinned via the batch==single serve test)."""
-    from esco_neo4j_spark.functions.vector import cosine_similarity, l2_norm
-
-    emb = F.col("embedding")
-    null_score = F.exists(
-        emb, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
-    ) | (l2_norm(emb) == F.lit(0.0))
     avecs = F.array(
         *[
             F.array(*[F.lit(float(x)) for x in vec]).cast(
@@ -805,15 +798,7 @@ def _anchor_score_multi_col(anchors: list[tuple[int, list[float]]]):
             for _, vec in anchors
         ]
     )
-    return F.transform(
-        avecs,
-        lambda a: F.round(
-            F.when(null_score, F.lit(None).cast("double")).otherwise(
-                cosine_similarity(emb, a)
-            ),
-            6,
-        ),
-    )
+    return F.transform(avecs, _anchor_score_col)
 
 
 def _score_ids_multi(

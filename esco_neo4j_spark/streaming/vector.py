@@ -39,7 +39,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esco_neo4j_spark.operators import driver_tier
+from esco_neo4j_spark.operators import driver_tier, vecfold
 from esco_neo4j_spark.operators.similarity import (
     brute_force_topk,
     ivf_assign_with_centroids,
@@ -230,22 +230,12 @@ def ivf_index_probe(
     tier (operators/driver_tier.py, no Spark job); a larger one is a
     full scan filtered on ``cell`` — the table is not partitioned, so
     nothing is pruned — re-ranked by brute_force_topk. Both tiers
-    return bit-identical rows."""
-    import math
-
+    return bit-identical rows. The cells are ranked as the batch IVF
+    probe ranks them (``vecfold.nearest_cells``): a zero-norm query
+    probes none and gets an empty result."""
     import numpy as np
 
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb) if na > 0 and nb > 0 else float("-inf")
-
-    ranked = sorted(
-        centroids,
-        key=lambda r: (-cos(query_vec, list(r["cvec"])), r["cid"]),
-    )
-    probe_cells = [r["cid"] for r in ranked[:nprobe]]
+    probe_cells = vecfold.nearest_cells(centroids, query_vec, nprobe)
     assign_path, _ = _paths(index_dir)
     recover_swap(assign_path)
     m = driver_tier.dir_matrix(

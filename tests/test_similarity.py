@@ -1390,3 +1390,104 @@ def test_driver_tier_cache_keeps_two_limit_sized_tables(tmp_path, monkeypatch):
     rows = driver_tier.lsh_candidates(m, planes, n_planes, 2, q)
     assert len(rows) and (n_planes, n_tables, 2) not in m.buckets
     assert [e is ivf for e in driver_tier._CACHE.values()] == [True]
+
+
+def test_vector_udfs_null_and_non_finite_contract(spark):
+    """The Arrow boundary of the pair, bucket and both SQ8-packer UDFs,
+    on float32 and float64 columns alike: the pair score is NULL when a
+    side is NULL, holds a NULL, NaN or infinite element, or has zero
+    norm, and otherwise equals the HOF chain's cosine; a NULL row lands
+    in bucket 0 of every table and every other row in the kernel's sign
+    buckets; the packers' codes equal sq_quantize's. The frame has more
+    partitions than rows, so some partitions are empty."""
+    import math
+
+    import numpy as np
+
+    from pyspark.sql import functions as F
+
+    from esco_neo4j_spark.functions.vector import cosine_similarity
+    from esco_neo4j_spark.operators import vecfold
+    from esco_neo4j_spark.operators.similarity import (
+        _all_buckets_pudf,
+        _pair_cosine_pudf,
+        _plane_matrix,
+        _screen_pack_pudf,
+        _screen_stats,
+        _sq_pack_pudf,
+        sq_quantize,
+    )
+
+    inf, nan = float("inf"), float("nan")
+    finite = np.random.default_rng(5).standard_normal((6, 4)).astype(np.float32)
+    rows = [
+        (0, None),
+        (1, [1.0, None, 2.0, 3.0]),
+        (2, [nan, 1.0, 2.0, 3.0]),
+        (3, [1.0, inf, 2.0, 3.0]),
+        (4, [1.0, 2.0, -inf, 3.0]),
+        (5, [0.0, 0.0, 0.0, 0.0]),
+    ] + [(6 + i, [float(x) for x in v]) for i, v in enumerate(finite)]
+    bad = {0, 1, 2, 3, 4, 5}
+    n_planes, n_tables, seed = 3, 2, 7
+    planes = _plane_matrix(4, n_planes * n_tables, seed)
+    for elem in ("float", "double"):
+        df = spark.createDataFrame(
+            rows, f"vec_id bigint, v array<{elem}>"
+        ).repartition(16)
+
+        a = df.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
+        b = df.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
+        pairs = a.crossJoin(b).select(
+            "ia", "ib", _pair_cosine_pudf()("va", "vb").alias("s")
+        )
+        got = {(r.ia, r.ib): r.s for r in pairs.collect()}
+        assert len(got) == len(rows) ** 2
+        good = df.filter(~F.col("vec_id").isin(*bad))
+        chain = (
+            good.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
+            .crossJoin(
+                good.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
+            )
+            .select("ia", "ib", cosine_similarity(F.col("va"), F.col("vb")).alias("s"))
+        )
+        want = {(r.ia, r.ib): r.s for r in chain.collect()}
+        for (i, j), s in got.items():
+            if i in bad or j in bad:
+                assert s is None, (elem, i, j, s)
+            else:
+                assert s == want[(i, j)] and not math.isnan(s), (elem, i, j)
+
+        bk = df.select(
+            "vec_id",
+            "v",
+            _all_buckets_pudf(4, n_planes, n_tables, seed)("v").alias("b"),
+        ).collect()
+        for r in bk:
+            if r.v is None:
+                assert r.b == [0] * n_tables
+            else:
+                x = np.asarray(
+                    [nan if e is None else e for e in r.v], dtype=np.float64
+                )
+                kern = vecfold.sign_buckets(x[None, :], planes, n_planes)[0]
+                assert r.b == kern.tolist(), (elem, r.vec_id)
+
+        nn = df.filter(F.col("v").isNotNull())
+        clean = nn.filter(~F.col("vec_id").isin(1, 2, 3, 4))
+        mns, mxs = _screen_stats(clean, None, "v", 4)
+        sq = {
+            r.vec_id: list(r.q)
+            for r in sq_quantize(clean, vec_col="v", dim=4).collect()
+        }
+        packed = nn.select(
+            "vec_id",
+            _sq_pack_pudf(mns, mxs)("v").alias("c"),
+            _screen_pack_pudf(mns, mxs)("v").alias("s"),
+        ).collect()
+        assert {r.vec_id for r in packed} == {i for i, v in rows if v is not None}
+        for r in packed:
+            assert len(r.c.code) == 4 and r.s.code == r.c.code
+            if r.vec_id in sq:
+                assert list(r.c.code) == sq[r.vec_id], (elem, r.vec_id)
+                assert r.c.cn2 == sum(c * c for c in sq[r.vec_id])

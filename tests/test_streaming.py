@@ -611,6 +611,18 @@ def test_ivf_index_stream_equals_batch(spark, tmp_path):
     ).collect()
     assert [r["vec_id"] for r in hits] == expected_ids
 
+    # a zero-norm query ranks no cell (cosine is undefined), as in the
+    # batch ivf_topk: empty result, same schema
+    from esco_neo4j_spark.operators.similarity import ivf_topk
+
+    zero = [0.0] * len(qvec)
+    probed = ivf_index_probe(spark, index_dir, centroids, zero, k=5, nprobe=2)
+    assert probed.collect() == []
+    assert probed.schema == ivf_index_probe(
+        spark, index_dir, centroids, qvec, k=5, nprobe=2
+    ).schema
+    assert ivf_topk(emb, zero, k=5).collect() == []
+
     # replay idempotency: re-run the LAST batch; index unchanged
     process_vector_batch(batches[2], index_dir, centroids)
     again = {
